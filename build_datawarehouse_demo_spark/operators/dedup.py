@@ -103,16 +103,22 @@ def shingle_arrays(
     )
 
 
+#: per-task cap on the MinHash kernel's distinct-shingle memo: past it
+#: the memo is cleared and refills, so a task holds at most this many
+#: H-vectors (~0.1 GB at H=64) however large the shingle vocabulary
+_MINHASH_MEMO_MAX = 1 << 17
+
+
 def _make_minhash_kernel(num_hashes: int, id_col: str, shingle_col: str):
     """Build the Arrow/Python MinHash-signature kernel for
-    ``minhash_signatures_from_arrays(kernel="arrow")`` — shipped as a
-    closure (the similarity._make_kernel_helpers discipline, so bare
-    driver sessions from a foreign cwd need no package import on the
-    workers).
+    ``minhash_signatures_from_arrays`` — shipped as a closure (the
+    similarity._make_kernel_helpers discipline, so bare driver sessions
+    from a foreign cwd need no package import on the workers).
 
     Value contract: mh_h = min over the doc's shingles of
     int(md5(f"{h}:{shingle}")[:8], 16) — bit-identical to the JVM
-    ``array_min(transform(shingles, hash32(seed=h)))`` fold (pinned by
+    ``array_min(transform(shingles, hash32(seed=h)))`` fold
+    (tests/jvm_reference.minhash_signatures_from_arrays, pinned by
     tests/test_dedup.py::test_minhash_kernel_identical). Empty or NULL
     shingle arrays yield NULL signatures (array_min of an empty array);
     NULL elements are skipped exactly as array_min skips the
@@ -122,8 +128,10 @@ def _make_minhash_kernel(num_hashes: int, id_col: str, shingle_col: str):
     md5-expressions PER SHINGLE PER DOCUMENT per plan reference; the
     kernel hashes each DISTINCT shingle once per worker (md5 prefix
     states for the H seeds are pre-fed and copied, and the H-vector is
-    memoized across batches in a per-task dict), then a doc's signature
-    is one vectorized element-wise min."""
+    memoized across batches in a per-task dict, capped at
+    _MINHASH_MEMO_MAX entries), then a doc's signature is one
+    vectorized element-wise min."""
+    memo_max = _MINHASH_MEMO_MAX
 
     def kernel(batches):
         import hashlib
@@ -144,6 +152,8 @@ def _make_minhash_kernel(num_hashes: int, id_col: str, shingle_col: str):
                     m.update(b)
                     vals.append(int(m.hexdigest()[:8], 16))
                 v = np.asarray(vals, dtype=np.int64)
+                if len(memo) >= memo_max:
+                    memo.clear()
                 memo[s] = v
             return v
 
@@ -182,78 +192,32 @@ def minhash_signatures_from_arrays(
     num_hashes: int = 16,
     id_col: str = "doc_id",
     shingle_col: str = "shingles",
-    kernel: str = "arrow",
 ) -> DataFrame:
-    """MinHash signatures as a NARROW projection: for each seed h,
-    array_min over the per-document shingle array's hashes. No explode,
-    no groupBy — the signature stage has zero shuffles, versus the
-    exploded form which shuffled every (doc, shingle, seed) row into a
-    per-document aggregate. Same md5-derived values bit-for-bit.
-    Output is (id, mh_0..mh_{H-1}) only — the wide shingle arrays stay
-    behind.
+    """MinHash signatures as a NARROW pass: for each seed h, the min
+    over the per-document shingle array's hashes. No explode, no
+    groupBy — the signature stage has zero shuffles. Output is
+    (id, mh_0..mh_{H-1}) only — the wide shingle arrays stay behind.
 
-    ``kernel="arrow"`` (default, r20 — guide §4.2): the H·|shingles|
-    interpreted md5 folds per document run instead as one mapInPandas
-    pass with a per-worker DISTINCT-shingle memo (_make_minhash_kernel
-    — values bit-identical, pinned by test_minhash_kernel_identical).
-    ``kernel="jvm"`` keeps the expression fold as the equivalence
-    reference. NOTE the arrow path ships (id, shingles) through the
-    Python boundary — callers that chain more columns should project
-    first (they all do: the input is the narrow shingle frame)."""
-    if kernel == "arrow":
-        from pyspark.sql import types as T
+    The H·|shingles| md5 hashes per document run as one mapInPandas
+    pass with a per-worker DISTINCT-shingle memo
+    (_make_minhash_kernel): values are bit-identical to the md5(seed:shingle)
+    fold, NULL and empty shingle arrays give NULL signatures (pinned
+    against tests/jvm_reference.minhash_signatures_from_arrays by
+    tests/test_dedup.py::test_minhash_kernel_identical). Only
+    (id, shingles) cross the Python boundary."""
+    from pyspark.sql import types as T
 
-        kfn = _make_minhash_kernel(num_hashes, id_col, shingle_col)
-        out_schema = T.StructType(
-            [T.StructField(id_col, sh_arrays.schema[id_col].dataType, True)]
-            + [
-                T.StructField(f"mh_{h}", T.LongType(), True)
-                for h in range(num_hashes)
-            ]
-        )
-        return sh_arrays.select(id_col, shingle_col).mapInPandas(
-            kfn, schema=out_schema
-        )
-    def _mh(h: int):
-        # closure FACTORY, never a default arg: pyspark binds every
-        # lambda parameter — defaults included — to a higher-order
-        # lambda variable, so `lambda s, h=h:` silently made h the
-        # ELEMENT INDEX column and hash32's f-string seed stringified
-        # it into "Column<'y_N'>:" — a literal carrying the session's
-        # lambda-variable counter. Signatures still deduplicated
-        # (distinct y_N per column ≈ distinct hash functions) and every
-        # oracle stayed green because exact-Jaccard verify saturates
-        # recall at fixture scale, but values broke the documented
-        # md5(seed:shingle) contract and CHANGED PER PLAN BUILD — fatal
-        # for r10's incremental pipeline, which joins a new batch's
-        # band keys against band keys persisted by an earlier plan
-        # (caught by test_training_data_incremental; same trap as the
-        # r9 streaming-SimHash note, now also guarded by a hash32
-        # seed-type assert).
-        return lambda s: hash32(s, seed=h)
-
-    sigs = sh_arrays.withColumns(
-        {
-            f"mh_{h}": F.array_min(F.transform(F.col(shingle_col), _mh(h)))
+    kfn = _make_minhash_kernel(num_hashes, id_col, shingle_col)
+    out_schema = T.StructType(
+        [T.StructField(id_col, sh_arrays.schema[id_col].dataType, True)]
+        + [
+            T.StructField(f"mh_{h}", T.LongType(), True)
             for h in range(num_hashes)
-        }
+        ]
     )
-    return sigs.select(id_col, *[f"mh_{h}" for h in range(num_hashes)])
-
-
-def minhash_signatures(
-    shingled: DataFrame, num_hashes: int = 16, id_col: str = "doc_id"
-) -> DataFrame:
-    """MinHash signature per document: for each seed h, the min of
-    hash32(h, shingle) over the doc's shingle set.
-
-    One groupBy(id) computing all H mins at once (map-side partial
-    aggregation halves the shuffle), not H passes.
-    """
-    aggs = [
-        F.min(hash32(F.col("shingle"), seed=h)).alias(f"mh_{h}") for h in range(num_hashes)
-    ]
-    return shingled.groupBy(id_col).agg(*aggs)
+    return sh_arrays.select(id_col, shingle_col).mapInPandas(
+        kfn, schema=out_schema
+    )
 
 
 def lsh_band_keys(
@@ -476,37 +440,6 @@ def lsh_candidate_pairs(
             F.least("__ia", "__ib").alias("id_a"),
             F.greatest("__ia", "__ib").alias("id_b"),
         )
-    )
-
-
-def exact_jaccard(
-    shingled: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs: intersection via
-    equi-join on shingle, union by inclusion-exclusion. Only candidate
-    pairs are scored — the expensive exact step runs on the LSH-pruned
-    set. Every input pair gets a score row — zero-intersection pairs
-    (pure hash-collision candidates) come back as jaccard 0.0, not as
-    silently missing rows."""
-    sizes = shingled.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = shingled.select(F.col(id_col).alias("id_a"), "shingle")
-    sb = shingled.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        pairs.join(sa, "id_a")
-        .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    inter = pairs.join(inter, ["id_a", "id_b"], "left").na.fill({"n_inter": 0})
-    return (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-        )
-        .select("id_a", "id_b", "jaccard")
     )
 
 

@@ -200,12 +200,12 @@ def _kernel_centroid_data(
 ):
     """Materialize the (bounded, nlist-row by design) centroid table for
     the Arrow assign kernels: ids ASCENDING (so a first-occurrence
-    argmax reproduces the JVM smallest-id tie-break), float64 matrix,
-    and per-centroid norms computed with the dot()/norm() fold's exact
+    argmax reproduces the smallest-id tie-break), float64 matrix, and
+    per-centroid norms computed with the dot()/norm() fold's exact
     dimension-sequential order. Centroid rows whose vector is NULL,
     wrong-dimension or zero-norm get cnorm 0 → denom 0 → NULL cosine
     for every corpus row, exactly the zip_with/when(denom>0) behavior
-    of the JVM kernel. The collect here is the same driver-side
+    of cosine(). The collect here is the same driver-side
     materialization the former broadcast-hash-join paid in
     BroadcastExchange — bounded by the quantizer sizing (nlist ≈ √n),
     never corpus-scale.
@@ -213,10 +213,10 @@ def _kernel_centroid_data(
     Input contract (ADVICE r19, documented): centroid/probe ids must
     be UNIQUE and vectors uniform-dimension — duplicates collapse via
     the dict below (last row wins) and dim is inferred from the first
-    non-empty vector of the smallest id, where the JVM join path would
-    score every row as-is. Every caller (quantizer training, index
-    build/append, probe routing) produces unique-id, fixed-dim
-    centroid tables by construction."""
+    non-empty vector of the smallest id, where a join against the
+    table would score every row as-is. Every caller (quantizer
+    training, index build/append, probe routing) produces unique-id,
+    fixed-dim centroid tables by construction."""
     import numpy as np
 
     rows = centroids.select(
@@ -255,88 +255,6 @@ def _kernel_centroid_data(
 #: scoring temporary to ~256 MB of float64 cells per task whatever the
 #: Arrow batch size or centroid count
 _KERNEL_BLOCK_CELLS = 1 << 25
-
-
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    top_n: int = 1,
-    kernel: str = "arrow",
-) -> DataFrame:
-    """Assign each vector to its ``top_n`` max-cosine centroids
-    (broadcast centroids, one narrow pass — this is the 'build the IVF
-    index' step; at 100 TB it's a single map stage). top_n=1 is index
-    build (each vector lives in ONE inverted list); top_n>1 is the
-    probe-side ``nprobe`` routing.
-
-    top_n=1 (the hot path: every Lloyd iteration, every index build)
-    computes the argmax with a map-side-combining ``max_by`` aggregate
-    instead of a row_number window (r17): the scored join emits
-    |corpus|·|centroids| rows, and the former window SHUFFLED AND
-    SORTED all of them, where the aggregate collapses each vector's
-    centroid scores to one row inside the join's own partitions before
-    any exchange. Winner identical to the window's (sim desc,
-    centroid_id asc): the ordering key coalesces NULL cosines to -2 —
-    below the cosine range, so a zero-norm vector still loses to every
-    real score and an all-null row still assigns to the smallest
-    centroid id, exactly as nulls-last desc ordering did (cosine()
-    returns NULL, never NaN, for zero norms — see its docstring).
-
-    ``kernel="arrow"`` (default, r19 — guide §4.2) computes the same
-    scores WITHOUT materializing the |corpus|·|centroids| joined rows
-    through the JVM: centroids are collected once (bounded nlist rows —
-    the same driver materialization the broadcast join paid), shipped
-    as a numpy matrix via a broadcast variable, and one mapInPandas
-    pass scores each Arrow batch with the dimension-sequential
-    multiply-then-add loop — BIT-IDENTICAL to the dot()/norm() fold
-    (the staged_projections precedent; pinned by
-    tests/test_similarity.py::test_ivf_assign_kernels_identical) — and
-    emits only the winner (or top_n) rows. ``kernel="jvm"`` keeps the
-    join+max_by/window plan (the equivalence-test reference and the
-    no-Arrow fallback). The arrow kernel drops centroid rows with a
-    NULL centroid id (ill-formed input the JVM path would score
-    meaninglessly). Corpus ``id_col`` values must be UNIQUE (ADVICE
-    r19, documented): the kernel emits one row per INPUT row, where
-    the JVM max_by/window path groups by id and would emit one row per
-    DISTINCT id — every caller feeds unique vec ids by construction
-    (parquet key columns, chunk uids)."""
-    if kernel == "arrow":
-        return _ivf_assign_arrow(
-            corpus, centroids, id_col, vec_col, centroid_id_col, top_n
-        )
-    c = corpus.select(F.col(id_col), _as_double(vec_col).alias("__v"))
-    cent = centroids.select(F.col(centroid_id_col), _as_double(vec_col).alias("__c"))
-    scored = c.join(F.broadcast(cent)).withColumn("sim", cosine(F.col("__v"), F.col("__c")))
-    if top_n == 1:
-        ordk = F.struct(
-            F.coalesce(F.col("sim"), F.lit(-2.0)).alias("s"),
-            (-F.col(centroid_id_col)).alias("nc"),
-        )
-        return (
-            scored.groupBy(id_col)
-            .agg(
-                F.max_by(
-                    F.struct(
-                        F.col(centroid_id_col).alias("__cid"), F.col("__v")
-                    ),
-                    ordk,
-                ).alias("__b")
-            )
-            .select(
-                id_col,
-                F.col("__b.__cid").alias(centroid_id_col),
-                F.col("__b.__v").alias("__v"),
-            )
-        )
-    w = Window.partitionBy(id_col).orderBy(F.col("sim").desc(), F.col(centroid_id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_n)
-        .select(id_col, centroid_id_col, F.col("__v").alias("__v"))
-    )
 
 
 def _make_kernel_helpers():
@@ -394,20 +312,34 @@ def _make_kernel_helpers():
 _rows_to_matrix, _kernel_sims = _make_kernel_helpers()
 
 
-def _ivf_assign_arrow(
+def ivf_assign(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroid_id_col: str,
-    top_n: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    centroid_id_col: str = "centroid_id",
+    top_n: int = 1,
 ) -> DataFrame:
-    """Arrow/numpy assign kernel (see ivf_assign's docstring): one
-    mapInPandas pass over (id, __v), centroid matrix shipped once per
-    executor as a broadcast variable, scores computed in the JVM fold's
-    exact IEEE order, winner(s) chosen by (key desc, centroid_id asc)
-    via first-occurrence argmax / stable argsort over the
-    ascending-cid-ordered matrix columns."""
+    """Assign each vector to its ``top_n`` max-cosine centroids (one
+    narrow pass — this is the 'build the IVF index' step; at 100 TB
+    it's a single map stage). top_n=1 is index build (each vector lives
+    in ONE inverted list); top_n>1 is the probe-side ``nprobe`` routing.
+
+    Scores are computed WITHOUT materializing |corpus|·|centroids|
+    joined rows: centroids are collected once (bounded nlist rows),
+    shipped as a numpy matrix via a broadcast variable, and one
+    mapInPandas pass scores each Arrow batch with the
+    dimension-sequential multiply-then-add loop — the same IEEE fold
+    order as dot()/norm(), so cosines are BIT-IDENTICAL — and emits
+    only the winner (or top_n) rows, ordered (sim desc, centroid_id
+    asc). A NULL cosine (zero-norm, NULL or wrong-dimension vector)
+    sorts below every real score, so an all-null row still assigns to
+    the smallest centroid id. Centroid rows with a NULL centroid id are
+    dropped. Corpus ``id_col`` values must be UNIQUE: the kernel emits
+    one row per INPUT row — every caller feeds unique vec ids by
+    construction (parquet key columns, chunk uids). Row-identical to the broadcast-join + max_by/window reference
+    tests/jvm_reference.ivf_assign (pinned by
+    tests/test_similarity.py::test_ivf_assign_kernels_identical)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -1438,7 +1370,7 @@ def embedding_near_dup_pairs_bucketed(
     )
 
 
-def _lloyd_partial_sums_arrow(
+def _lloyd_partial_sums(
     corpus: DataFrame,
     centroids: DataFrame,
     id_col: str,
@@ -1446,7 +1378,7 @@ def _lloyd_partial_sums_arrow(
     centroid_id_col: str,
 ) -> DataFrame:
     """One mapInPandas pass: assign each vector to its winning centroid
-    (the _ivf_assign_arrow scoring, bit-identical ordering) and emit
+    (ivf_assign's scoring, bit-identical ordering) and emit
     per-(centroid, dim) partial (sum, count) rows for the Lloyd mean.
     Contribution semantics replicate the JVM posexplode+avg exactly:
     NULL vectors contribute nothing; wrong-length vectors contribute
@@ -1551,61 +1483,42 @@ def kmeans_lloyd_step(
     centroid_id_col: str = "centroid_id",
     round_to: int | None = 6,
     as_dims: bool = False,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """One Lloyd iteration: assign every vector to its max-cosine
-    centroid (ivf_assign — broadcast centroids, narrow pass), then
-    recompute each centroid as the element-wise mean of its members.
+    centroid (ivf_assign's scoring, narrow pass), then recompute each
+    centroid as the element-wise mean of its members.
 
     The iterative-ML primitive a training-data pipeline runs to build
-    IVF/clustering indexes. Scale shape: assignment is one broadcast
-    pass over the corpus; the mean is posexplode -> (cluster, dim)
-    partial-aggregated avg -> rebuild, so the shuffle carries one
-    (cluster, dim, partial sum) row per partition×cluster×dim, never
-    vectors. Clusters that lose all members are dropped (standard
+    IVF/clustering indexes. Scale shape: assignment AND per-(centroid,
+    dim) partial sums run in ONE mapInPandas pass
+    (_lloyd_partial_sums) — the |corpus|·|centroids| scored rows and
+    the |corpus|·dim per-coordinate rows never materialize; the only
+    exchange carries (centroid, dim, partial sum, count) rows, one set
+    per task. Clusters that lose all members are dropped (standard
     Lloyd degeneracy; callers reseed if needed).
 
     round_to rounds each mean coordinate (oracle determinism: partial
-    vs sequential float summation differs below 6dp).
+    vs sequential float summation differs below 6dp — numpy's pairwise
+    sum within a task's partial, like the partition-order variance of
+    any partial aggregate, sits below the guard).
 
     as_dims=True returns the scalarized (centroid_id, dim, m) rows
     (dim 0-based) instead of re-packing the mean vector — the shape
     hash-based checkers can canonicalize (array cells crash the
     driver's pandas sort, VERDICT.md round 2 item 1).
 
-    ``kernel="arrow"`` (default, r19 — guide §4.2/§2.3): assignment AND
-    per-(centroid, dim) partial sums run in ONE mapInPandas pass —
-    the |corpus|·|centroids| scored join and the |corpus|·dim
-    posexplode never materialize; the only exchange carries
-    (centroid, dim, partial sum, count) rows, one set per task. The
-    assignment winner is bit-identical to the JVM kernel (see
-    ivf_assign); the mean's float-summation order differs from avg()'s
-    partial merge only WITHIN a task's partial (numpy pairwise vs
-    sequential), which sits below the ``round_to`` guard exactly like
-    the partition-order variance the JVM partial aggregate already
-    has (see the round_to note above). ``kernel="jvm"`` keeps the old
-    plan for the equivalence test."""
-    if kernel == "arrow":
-        parts = _lloyd_partial_sums_arrow(
-            corpus, centroids, id_col, vec_col, centroid_id_col
-        )
-        mean_col = F.when(
-            F.sum("pcnt") > 0, F.sum("psum") / F.sum("pcnt")
-        ).otherwise(F.lit(None))
-        if round_to is not None:
-            mean_col = F.round(mean_col, round_to)
-        per_dim = parts.groupBy(centroid_id_col, "dim").agg(mean_col.alias("m"))
-    else:
-        assigned = ivf_assign(
-            corpus, centroids, id_col, vec_col, centroid_id_col, kernel="jvm"
-        )
-        dims = assigned.select(
-            centroid_id_col, F.posexplode(F.col("__v")).alias("dim", "x")
-        )
-        mean_col = F.avg("x")
-        if round_to is not None:
-            mean_col = F.round(mean_col, round_to)
-        per_dim = dims.groupBy(centroid_id_col, "dim").agg(mean_col.alias("m"))
+    Row-identical to the posexplode + avg() reference
+    tests/jvm_reference.kmeans_lloyd_step (pinned by
+    tests/test_similarity.py::test_lloyd_step_kernels_identical)."""
+    parts = _lloyd_partial_sums(
+        corpus, centroids, id_col, vec_col, centroid_id_col
+    )
+    mean_col = F.when(
+        F.sum("pcnt") > 0, F.sum("psum") / F.sum("pcnt")
+    ).otherwise(F.lit(None))
+    if round_to is not None:
+        mean_col = F.round(mean_col, round_to)
+    per_dim = parts.groupBy(centroid_id_col, "dim").agg(mean_col.alias("m"))
     if as_dims:
         return per_dim
     return (
@@ -1786,75 +1699,32 @@ def ivf_assign_two_level(
     gprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Two-level inverted-list build: each vector routes to its
-    ``gprobe`` nearest SUPER-centroids (broadcast, ~√nlist of them),
-    then scores only the centroids living in those groups and keeps
-    the max-cosine one. Per-row cost drops from nlist ≈ √n (the flat
-    build's O(n^1.5) total) to ~(1+gprobe)·√nlist ≈ n^0.25 — the
-    two-level fix VERDICT r7 item 1 prescribes. Assignment is
-    approximate exactly like FAISS's coarse quantization (the true
-    nearest centroid can sit in an unprobed group); gprobe is the
-    quality knob. Each centroid lives in ONE group, so candidate
-    (vector, centroid) pairs are unique — no dedup exchange.
+    ``gprobe`` nearest SUPER-centroids (~√nlist of them), then scores
+    only the centroids living in those groups and keeps the max-cosine
+    one. Per-row cost drops from nlist ≈ √n (the flat build's O(n^1.5)
+    total) to ~(1+gprobe)·√nlist ≈ n^0.25. Assignment is approximate
+    exactly like FAISS's coarse quantization (the true nearest centroid
+    can sit in an unprobed group); gprobe is the quality knob. Each
+    centroid lives in ONE group, so candidate (vector, centroid) pairs
+    are unique — no dedup exchange.
 
     Output matches ivf_assign: (id, centroid_id, __v) — feed to
     ivf_topk_assigned.
 
-    ``kernel="arrow"`` (default, r19 — guide §4.2): BOTH levels run in
-    one mapInPandas pass — super routing, member scoring and the
-    winner pick never materialize the routed×members joined rows or
-    the per-id row_number exchange. Scores use the exact fold order
-    (see ivf_assign); the winner ordering (sim desc NULLS LAST,
-    centroid_id asc) and the drop-rows-with-no-candidates behavior
-    replicate the JVM window path row-for-row (pinned by
-    tests/test_similarity.py::test_two_level_kernels_identical)."""
-    if kernel == "arrow":
-        return _ivf_assign_two_level_arrow(
-            corpus, centroids, super_centroids, centroid_groups, gprobe, id_col, vec_col
-        )
-    routed = ivf_assign(
-        corpus,
-        super_centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-        centroid_id_col="group_id",
-        top_n=gprobe,
-        kernel="jvm",
-    )
-    cmap = centroid_groups.select("centroid_id", "group_id")
-    cvecs = centroids.select(F.col("centroid_id"), _as_double(vec_col).alias("__c"))
-    scored = (
-        routed.join(F.broadcast(cmap), "group_id")
-        .join(F.broadcast(cvecs), "centroid_id")
-        .withColumn("sim", cosine(F.col("__v"), F.col("__c")))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("sim").desc(), F.col("centroid_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, "centroid_id", "__v")
-    )
-
-
-def _ivf_assign_two_level_arrow(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    super_centroids: DataFrame,
-    centroid_groups: DataFrame,
-    gprobe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Fused two-level assign kernel (see ivf_assign_two_level): per
-    batch, route to the gprobe best super-centroids (stable argsort —
+    BOTH levels run in one mapInPandas pass: per batch, route to the
+    gprobe best super-centroids (stable argsort —
     group_id asc on ties, NULLs ordered last via the -2 sentinel),
     then score only those groups' member centroids group-by-group
     (vectorized per (slot, group) cohort) and keep the best
     (key desc, centroid_id asc) across slots. Candidate sets are
-    disjoint (each centroid lives in one group), so the cross-slot
-    merge needs only the running (best_key, best_cid_index) pair."""
+    disjoint, so the cross-slot merge needs only the running
+    (best_key, best_cid_index) pair. Scores use ivf_assign's exact
+    fold order; rows with no candidate centroid are dropped.
+    Row-identical to the join + row_number reference
+    tests/jvm_reference.ivf_assign_two_level (pinned by
+    tests/test_similarity.py::test_two_level_kernels_identical)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T

@@ -776,13 +776,18 @@ def default_classifier_weights(dim: int, seed: int = 0) -> list[float]:
     ]
 
 
+#: the linear quality classifier's default intercept — the single
+#: source for quality_classifier_score and the fused clean-front kernel
+CLASSIFIER_BIAS = 0.0
+
+
 def quality_classifier_score(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     dim: int = 64,
     weights: list[float] | None = None,
-    bias: float = 0.0,
+    bias: float = CLASSIFIER_BIAS,
     threshold: float = 0.5,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -958,19 +963,30 @@ GOPHER_STOPWORDS: tuple[str, ...] = (
     "the", "be", "to", "of", "and", "that", "have", "with",
 )
 
+#: Gopher quality thresholds (Appendix A1.1.3) that
+#: clean_filter_survivors does not expose — the single source for
+#: gopher_quality_rules' defaults and the fused clean-front kernel
+GOPHER_MAX_WORDS = 100_000
+GOPHER_MIN_MEAN_WORD_LEN = 3.0
+GOPHER_MAX_MEAN_WORD_LEN = 10.0
+GOPHER_MAX_SYMBOL_WORD_RATIO = 0.1
+GOPHER_MAX_BULLET_LINE_RATIO = 0.9
+GOPHER_MAX_ELLIPSIS_LINE_RATIO = 0.3
+GOPHER_MIN_ALPHA_WORD_RATIO = 0.8
+
 
 def gopher_quality_rules(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_word_ratio: float = 0.1,
-    max_bullet_line_ratio: float = 0.9,
-    max_ellipsis_line_ratio: float = 0.3,
-    min_alpha_word_ratio: float = 0.8,
+    max_words: int = GOPHER_MAX_WORDS,
+    min_mean_word_len: float = GOPHER_MIN_MEAN_WORD_LEN,
+    max_mean_word_len: float = GOPHER_MAX_MEAN_WORD_LEN,
+    max_symbol_word_ratio: float = GOPHER_MAX_SYMBOL_WORD_RATIO,
+    max_bullet_line_ratio: float = GOPHER_MAX_BULLET_LINE_RATIO,
+    max_ellipsis_line_ratio: float = GOPHER_MAX_ELLIPSIS_LINE_RATIO,
+    min_alpha_word_ratio: float = GOPHER_MIN_ALPHA_WORD_RATIO,
     min_stopword_hits: int = 2,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -1329,14 +1345,23 @@ def gopher_dup_ngram_rules(
     )
 
 
+#: Gopher repetition thresholds (Appendix A1.1.2) that
+#: clean_filter_survivors does not expose — the single source for
+#: gopher_repetition_rules' defaults and the fused clean-front kernel
+GOPHER_MAX_DUP_LINE_FRAC = 0.30
+GOPHER_MAX_DUP_PARA_FRAC = 0.30
+GOPHER_MAX_DUP_LINE_CHAR_FRAC = 0.20
+GOPHER_MAX_DUP_PARA_CHAR_FRAC = 0.20
+
+
 def gopher_repetition_rules(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_dup_line_frac: float = 0.30,
-    max_dup_para_frac: float = 0.30,
-    max_dup_line_char_frac: float = 0.20,
-    max_dup_para_char_frac: float = 0.20,
+    max_dup_line_frac: float = GOPHER_MAX_DUP_LINE_FRAC,
+    max_dup_para_frac: float = GOPHER_MAX_DUP_PARA_FRAC,
+    max_dup_line_char_frac: float = GOPHER_MAX_DUP_LINE_CHAR_FRAC,
+    max_dup_para_char_frac: float = GOPHER_MAX_DUP_PARA_CHAR_FRAC,
     max_top_gram_char_frac: tuple[float, float, float] = (0.20, 0.18, 0.16),
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -1445,23 +1470,10 @@ def _make_clean_front_kernel(
     min_words_per_line: int,
     min_sentences: int,
     min_words: int,
-    max_words: int,
-    min_mean_word_len: float,
-    max_mean_word_len: float,
-    max_symbol_word_ratio: float,
-    max_bullet_line_ratio: float,
-    max_ellipsis_line_ratio: float,
-    min_alpha_word_ratio: float,
     min_stopword_hits: int,
-    stopwords: tuple[str, ...],
-    max_dup_line_frac: float,
-    max_dup_para_frac: float,
-    max_dup_line_char_frac: float,
-    max_dup_para_char_frac: float,
     max_top_gram_char_frac: tuple[float, float, float],
     clf_dim: int,
     clf_weights: list[float],
-    clf_bias: float,
     clf_threshold: float,
     id_col: str,
     text_col: str,
@@ -1469,7 +1481,9 @@ def _make_clean_front_kernel(
     """Build the fused Arrow/Python kernel of the modern cleaning
     stack's filter FRONT (C4 line filters -> Gopher quality -> Gopher
     repetition -> linear classifier) for
-    ``plans.training_data.clean_filter_survivors(kernel="arrow")``.
+    ``plans.training_data.clean_filter_survivors``. Thresholds the
+    front does not expose come from the batteries' single-source
+    module constants (GOPHER_*, CLASSIFIER_BIAS).
 
     Returned as a CLOSURE so cloudpickle ships it by value to the
     executor Python workers (the similarity._make_kernel_helpers
@@ -1478,8 +1492,9 @@ def _make_clean_front_kernel(
     a foreign cwd).
 
     Equivalence contract (guide §4.2, the r19 IVF-kernel discipline —
-    pinned by tests/test_text.py clean-front kernel tests): every
-    per-document decision reproduces the JVM expression chain's
+    pinned against tests/jvm_reference.clean_filter_survivors by
+    tests/test_text.py::test_clean_front_kernel_identical_edge_corpus):
+    every per-document decision reproduces the JVM expression chain's
     semantics on the batteries' documented input domain:
 
     - Spark ``trim``/``ltrim``/``rtrim`` strip the SPACE character
@@ -1502,12 +1517,12 @@ def _make_clean_front_kernel(
       6dp round exactly as the Spark-vs-DuckDB oracle already
       tolerates (same function family, same rounding boundary).
 
-    Known, documented divergence (the ivf_assign NULL-centroid
-    precedent): locale-sensitive ``lower()`` edge cases (e.g. Turkish
-    dotted I) and non-BMP case mapping may differ between the JVM and
-    Python — the batteries' corpora are ASCII by construction and the
-    equivalence pytest pins behavior on representative + adversarial
-    inputs.
+    Non-ASCII case mapping is pinned equal on adversarial rows
+    (Turkish dotted/dotless i, sharp s, Greek final sigma, a combining
+    mark, a non-BMP code point) and so is unicode whitespace outside
+    the Java ``\\s`` class. A JVM whose default locale carries
+    language-specific case rules (tr, az, lt) could still lower()
+    differently from Python's locale-independent mapping.
     """
     import math
     import re
@@ -1517,7 +1532,7 @@ def _make_clean_front_kernel(
     alpha_re = re.compile(r"[A-Za-z]")
     para_re = re.compile(r"\n{2,}")
     q6 = Decimal("0.000001")
-    stopset = frozenset(stopwords)
+    stopset = frozenset(GOPHER_STOPWORDS)
     term_chars = ('.', '!', '?', '"')
     line_terms = '\n\r\x85\u2028\u2029'
     caps_top = tuple(float(c) for c in max_top_gram_char_frac)
@@ -1586,12 +1601,12 @@ def _make_clean_front_kernel(
         )
         stop_hits = len({t.lower() for t in toks} & stopset)
         return (
-            float(min_words) <= float(n) <= float(max_words)
-            and float(min_mean_word_len) <= mean_len <= float(max_mean_word_len)
-            and symbol_ratio <= float(max_symbol_word_ratio)
-            and bullet <= float(max_bullet_line_ratio)
-            and ell_lines <= float(max_ellipsis_line_ratio)
-            and alpha >= float(min_alpha_word_ratio)
+            float(min_words) <= float(n) <= GOPHER_MAX_WORDS
+            and GOPHER_MIN_MEAN_WORD_LEN <= mean_len <= GOPHER_MAX_MEAN_WORD_LEN
+            and symbol_ratio <= GOPHER_MAX_SYMBOL_WORD_RATIO
+            and bullet <= GOPHER_MAX_BULLET_LINE_RATIO
+            and ell_lines <= GOPHER_MAX_ELLIPSIS_LINE_RATIO
+            and alpha >= GOPHER_MIN_ALPHA_WORD_RATIO
             and stop_hits >= int(min_stopword_hits)
         )
 
@@ -1609,9 +1624,13 @@ def _make_clean_front_kernel(
     def rep_pass(cleaned: str, toks: list) -> bool:
         lines = [l for l in cleaned.split("\n") if l.strip(" ") != ""]
         paras = [p for p in para_re.split(cleaned) if p.strip(" ") != ""]
-        if not dup_rules(lines, max_dup_line_frac, max_dup_line_char_frac):
+        if not dup_rules(
+            lines, GOPHER_MAX_DUP_LINE_FRAC, GOPHER_MAX_DUP_LINE_CHAR_FRAC
+        ):
             return False
-        if not dup_rules(paras, max_dup_para_frac, max_dup_para_char_frac):
+        if not dup_rules(
+            paras, GOPHER_MAX_DUP_PARA_FRAC, GOPHER_MAX_DUP_PARA_CHAR_FRAC
+        ):
             return False
         nt = len(toks)
         norm_len = len(" ".join(toks))
@@ -1667,7 +1686,7 @@ def _make_clean_front_kernel(
                 acc = 0.0
                 for t in toks:
                     acc += weights[bucket(t)]
-                z = float(clf_bias) + acc / float(n)
+                z = CLASSIFIER_BIAS + acc / float(n)
                 score = round6(1.0 / (1.0 + math.exp(-z)))
                 if not score >= float(clf_threshold):
                     continue
@@ -1696,7 +1715,7 @@ def _make_featured_front_kernel(
 ):
     """Build the fused Arrow/Python kernel of the HEURISTIC feature
     front (clean_normalize -> lang_id -> quality_score -> keep-filter)
-    for ``plans.training_data._featured_survivors(kernel="arrow")`` —
+    for ``plans.training_data._featured_survivors`` —
     the r20 twin of _make_clean_front_kernel over the other pipeline
     family (prepare_training_data / prepare_training_data_neardup and
     their incremental/keep-best arms).
@@ -1706,9 +1725,10 @@ def _make_featured_front_kernel(
     SQL on the kernel's output — it is the pipeline's one semantic
     exchange, not per-row Python work.
 
-    Equivalence contract (pinned by
-    tests/test_text.py::test_featured_front_kernel_identical*): the
-    same Java-regex/trim/round conventions as _make_clean_front_kernel
+    Equivalence contract (pinned against
+    tests/jvm_reference.featured_survivors by
+    tests/test_text.py::test_featured_front_kernel_identical_edge_corpus):
+    the same Java-regex/trim/round conventions as _make_clean_front_kernel
     (documented there), plus:
 
     - ``quality`` is an UNROUNDED double output — the kernel replays

@@ -23,10 +23,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
-def _dec(col: str) -> F.Column:
-    return F.col(col).cast("decimal(18,2)")
-
-
 def register_parity() -> None:
     # ------------------------------------------------------------------
     # §2.1 scans / sources / sinks / generators

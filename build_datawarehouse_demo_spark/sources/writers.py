@@ -128,14 +128,6 @@ def save_tables_concurrent(
         return {name: fut.result() for name, fut in futures.items()}
 
 
-def register_views(dataframes: dict[str, DataFrame]) -> None:
-    """Zero-copy alternative to materialization: expose the lazy plans
-    as temp views (the reference's `con.register`,
-    /root/reference/transformation.py:531)."""
-    for name, df in dataframes.items():
-        df.createOrReplaceTempView(name)
-
-
 def compact_parquet_dir(
     spark: SparkSession,
     src_path: str,

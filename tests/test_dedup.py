@@ -683,12 +683,14 @@ def test_keep_best_supports_string_ids(spark):
 
 
 def test_minhash_kernel_identical(spark):
-    """minhash_signatures_from_arrays(kernel='arrow') must be
-    BIT-IDENTICAL to the JVM array_min/transform fold (kernel='jvm') —
+    """minhash_signatures_from_arrays (the Arrow kernel) must be
+    BIT-IDENTICAL to the JVM array_min/transform fold
+    (jvm_reference.minhash_signatures_from_arrays) —
     including NULL/empty shingle arrays (NULL signatures) and NULL
     elements (skipped, as array_min skips the null-propagated hash).
     Full-fixture equivalence (sf0.1 + sf1 survivor corpora,
     row-identical) is recorded in OPTIMIZATION_r20.md."""
+    import jvm_reference as ref
     from build_datawarehouse_demo_spark.operators.dedup import (
         minhash_signatures_from_arrays,
     )
@@ -701,19 +703,41 @@ def test_minhash_kernel_identical(spark):
         (4, ["a b c", None, "z z z"]),        # NULL element skipped
         (5, ["a b c", "b c d", "c d e"]),     # duplicate set of doc 0
         (6, ["\u00e9 accent gram", "tab\tinside", ""]),  # unicode + empty string
+        (7, ["emoji \U0001F600 gram", "a b c"]),  # non-BMP code point
+        (8, ["caf\u0065\u0301 au lait", "\u0130 \u0131 \u00df"]),  # combining mark
     ]
     df = spark.createDataFrame(rows, "doc_id long, shingles array<string>")
     for H in (4, 24):
         jvm = sorted(
             tuple(r)
-            for r in minhash_signatures_from_arrays(
-                df, H, "doc_id", kernel="jvm"
-            ).collect()
+            for r in ref.minhash_signatures_from_arrays(df, H, "doc_id").collect()
         )
         arw = sorted(
             tuple(r)
-            for r in minhash_signatures_from_arrays(
-                df, H, "doc_id", kernel="arrow"
-            ).collect()
+            for r in minhash_signatures_from_arrays(df, H, "doc_id").collect()
         )
         assert jvm == arw, (H, jvm[:2], arw[:2])
+
+
+def test_minhash_memo_cap_keeps_signatures(spark, monkeypatch):
+    """The kernel's per-task shingle memo is cleared whenever it
+    reaches _MINHASH_MEMO_MAX entries. With a cap of 2 it refills many
+    times inside one batch; signatures must still equal the JVM fold
+    (a stale or partial memo would show as a wrong minimum)."""
+    import jvm_reference as ref
+    from build_datawarehouse_demo_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_MINHASH_MEMO_MAX", 2)
+    rows = [
+        (i, [f"w{(i + j) % 13} w{j} w{i % 5}" for j in range(7)] + ["a b c"])
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, shingles array<string>")
+    jvm = sorted(
+        tuple(r) for r in ref.minhash_signatures_from_arrays(df, 8, "doc_id").collect()
+    )
+    arw = sorted(
+        tuple(r)
+        for r in dedup.minhash_signatures_from_arrays(df, 8, "doc_id").collect()
+    )
+    assert jvm == arw

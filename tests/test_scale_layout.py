@@ -186,32 +186,32 @@ def test_zorder_write_compact_in_both_dims(spark, tmp_path):
 
 
 def test_training_pipeline_barrier_keeps_filter_above_features(spark):
-    """Pin the optimizer-barrier CONTRACT of prepare_training_data
-    (VERDICT r8 item 6): the quality filter depends on Catalyst's
-    nondeterministic-projection rule to stay ABOVE the feature
+    """Pin the optimizer-barrier CONTRACT of the expression-chain
+    reference of prepare_training_data's feature front
+    (jvm_reference.featured_survivors): the quality filter depends on
+    Catalyst's nondeterministic-projection rule to stay ABOVE the feature
     projection — a Spark upgrade that weakened that rule would silently
     re-enable a ~20x per-row feature recompute (higher-order functions
     get no codegen CSE, so a pushed-down predicate re-evaluates
     split/filter/regexp chains per conjunct). Assert the optimized
     plan's shape, not the runtime, so the break is loud and immediate.
     """
+    import jvm_reference as ref
     from build_datawarehouse_demo_spark.operators.sampling import (
         train_val_test_split,
-    )
-    from build_datawarehouse_demo_spark.plans.training_data import (
-        _featured_survivors,
     )
 
     df = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog") for i in range(10)],
         "doc_id long, text string",
     )
-    # the barrier lives on the JVM expression path — since r20 the
-    # default front is the fused Arrow kernel (no Filter to pin), so
-    # pin the kernel="jvm" reference's composed plan explicitly
+    # the barrier lives on the JVM expression chain — the product front
+    # is the fused Arrow kernel (no Filter to pin), so pin the composed
+    # plan of the test-only reference the kernel equivalence pins
+    # compare against
     plan = (
         train_val_test_split(
-            _featured_survivors(df, "doc_id", "text", 5, 0.3, kernel="jvm"),
+            ref.featured_survivors(df, "doc_id", "text", 5, 0.3),
             "doc_id",
         )
         ._jdf.queryExecution()
@@ -241,15 +241,13 @@ def test_training_pipeline_barrier_keeps_filter_above_features(spark):
 
 
 def test_clean_filter_front_is_narrow(spark):
-    """The modern-cleaning-stack FRONT (clean_filter_survivors — C4 →
-    Gopher quality → Gopher repetition → classifier, r12) must stay a
-    NARROW chain: projections + barrier-pinned filters over one input,
-    zero Exchange, zero join, and every battery filter referencing
-    computed attributes only (the prepare_training_data barrier
-    contract, applied four times)."""
-    from build_datawarehouse_demo_spark.plans.training_data import (
-        clean_filter_survivors,
-    )
+    """The expression-chain reference of the modern-cleaning-stack
+    FRONT (jvm_reference.clean_filter_survivors — C4 → Gopher quality →
+    Gopher repetition → classifier) must stay a NARROW chain:
+    projections + barrier-pinned filters over one input, zero Exchange,
+    zero join, and every battery filter referencing computed attributes
+    only (the featured-front barrier contract, applied four times)."""
+    import jvm_reference as ref
 
     df = spark.createDataFrame(
         [
@@ -259,8 +257,8 @@ def test_clean_filter_front_is_narrow(spark):
         ],
         "doc_id long, text string",
     )
-    qe = clean_filter_survivors(
-        df, min_words=3, min_stopword_hits=1, clf_threshold=0.0, kernel="jvm"
+    qe = ref.clean_filter_survivors(
+        df, min_words=3, min_stopword_hits=1, clf_threshold=0.0
     )._jdf.queryExecution()
     optimized = qe.optimizedPlan().toString()
     physical = qe.executedPlan().toString()
@@ -277,10 +275,10 @@ def test_clean_filter_front_is_narrow(spark):
 
 
 def test_clean_filter_front_arrow_is_narrow(spark):
-    """The r20 default front (fused Arrow kernel) must keep the same
-    narrow shape: ONE MapInPandas over the scan, zero Exchange, zero
-    join — and ship only (id, text) into the Python boundary (guide
-    §4.1 column-pruning discipline)."""
+    """The product front (fused Arrow kernel) must keep the
+    reference's narrow shape: ONE MapInPandas over the scan, zero
+    Exchange, zero join — and ship only (id, text) into the Python
+    boundary (column pruning)."""
     from build_datawarehouse_demo_spark.plans.training_data import (
         clean_filter_survivors,
     )
@@ -309,18 +307,18 @@ def test_clean_filter_front_arrow_is_narrow(spark):
 
 
 def test_barrier_keep_survives_predicate_pushdown(spark):
-    """Spark-upgrade guard for _barrier_keep (r12 judge finding 3 /
-    r13 item 6): the barrier works ONLY because PushDownPredicates
-    refuses to push a Filter whose condition references a
-    nondeterministic expression, and because the OR is non-splittable
-    (`kept OR __barrier < 0` is one conjunct). If a future optimizer
+    """Spark-upgrade guard for jvm_reference.barrier_keep: the barrier
+    works ONLY because PushDownPredicates refuses to push a Filter
+    whose condition references a nondeterministic expression, and
+    because the OR is non-splittable (`kept OR __barrier < 0` is one
+    conjunct). If a future optimizer
     learns to constant-fold the `__barrier < 0` branch away (it is
     always false) or to split the OR, the filter starts pushing below
     the projection and every battery's HOF features re-evaluate once
     per rule reference — silently, with correct results. This test
     fails loudly instead: every optimized Filter that tests `kept`
     must still reference the nondeterministic column."""
-    from build_datawarehouse_demo_spark.plans.training_data import _barrier_keep
+    from jvm_reference import barrier_keep
 
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     # `kept` derived through a non-cheap expression — the shape whose
@@ -329,7 +327,7 @@ def test_barrier_keep_survives_predicate_pushdown(spark):
         "kept", F.size(F.split(F.col("text"), " ")) >= F.lit(2)
     )
     plan = (
-        _barrier_keep(feat, "doc_id")._jdf.queryExecution().optimizedPlan().toString()
+        barrier_keep(feat, "doc_id")._jdf.queryExecution().optimizedPlan().toString()
     )
     kept_filters = [
         ln for ln in plan.splitlines() if "Filter " in ln and "kept" in ln
@@ -346,7 +344,7 @@ def test_barrier_keep_survives_predicate_pushdown(spark):
     assert barrier_filters, (
         "no optimized Filter references the __barrier column — "
         "PushDownPredicates (or a new rule) eliminated the barrier "
-        "branch; _barrier_keep no longer pins battery filters and the "
+        "branch; barrier_keep no longer pins battery filters and the "
         "narrow-front contract is at risk. Re-derive the barrier idiom "
         f"for this Spark version.\n{plan}"
     )

@@ -949,6 +949,7 @@ def test_semdedup_incremental_matches_two_phase_reference(spark):
 
 # ---------------------------------------------------------------------------
 # r19: Arrow assign kernels must be row-identical to the JVM join paths
+# (tests/jvm_reference.py)
 # ---------------------------------------------------------------------------
 
 
@@ -980,23 +981,26 @@ def _rowset(df):
 
 
 def test_ivf_assign_kernels_identical(spark, kernel_corpus, kernel_cents):
+    import jvm_reference as ref
     from build_datawarehouse_demo_spark.operators.similarity import ivf_assign
 
     for top_n in (1, 3):
-        jvm = ivf_assign(kernel_corpus, kernel_cents, top_n=top_n, kernel="jvm")
-        arrow = ivf_assign(kernel_corpus, kernel_cents, top_n=top_n, kernel="arrow")
+        jvm = ref.ivf_assign(kernel_corpus, kernel_cents, top_n=top_n)
+        arrow = ivf_assign(kernel_corpus, kernel_cents, top_n=top_n)
         assert _rowset(jvm) == _rowset(arrow), f"top_n={top_n}"
 
 
 def test_lloyd_step_kernels_identical(spark, kernel_corpus, kernel_cents):
+    import jvm_reference as ref
     from build_datawarehouse_demo_spark.operators.similarity import kmeans_lloyd_step
 
-    jvm = kmeans_lloyd_step(kernel_corpus, kernel_cents, as_dims=True, kernel="jvm")
-    arrow = kmeans_lloyd_step(kernel_corpus, kernel_cents, as_dims=True, kernel="arrow")
+    jvm = ref.kmeans_lloyd_step(kernel_corpus, kernel_cents, as_dims=True)
+    arrow = kmeans_lloyd_step(kernel_corpus, kernel_cents, as_dims=True)
     assert _rowset(jvm) == _rowset(arrow)
 
 
 def test_two_level_kernels_identical(spark, kernel_corpus, kernel_cents):
+    import jvm_reference as ref
     from build_datawarehouse_demo_spark.operators.similarity import (
         ivf_assign_two_level,
         ivf_group_centroids,
@@ -1004,12 +1008,8 @@ def test_two_level_kernels_identical(spark, kernel_corpus, kernel_cents):
 
     sup, groups = ivf_group_centroids(kernel_cents, n_groups=3, n_iter=1)
     sup, groups = sup.localCheckpoint(), groups.localCheckpoint()
-    jvm = ivf_assign_two_level(
-        kernel_corpus, kernel_cents, sup, groups, gprobe=2, kernel="jvm"
-    )
-    arrow = ivf_assign_two_level(
-        kernel_corpus, kernel_cents, sup, groups, gprobe=2, kernel="arrow"
-    )
+    jvm = ref.ivf_assign_two_level(kernel_corpus, kernel_cents, sup, groups, gprobe=2)
+    arrow = ivf_assign_two_level(kernel_corpus, kernel_cents, sup, groups, gprobe=2)
     assert _rowset(jvm) == _rowset(arrow)
 
 

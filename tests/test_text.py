@@ -1150,17 +1150,37 @@ def _edge_corpus_rows():
         # single-char and short-token mean-word-length extremes
         (22, ("a b c d e f g h i j." + " k l m n o p q r s t.") * 3),
         (23, (" ".join(["supercalifragilistic"] * 12) + ".") * 3),
+        # non-ASCII: case mapping that is locale- or context-sensitive
+        # (Turkish dotted/dotless i, sharp s, Greek final sigma), a
+        # combining mark, unicode whitespace that is NOT Java \\s (one
+        # fused token in both engines), the NEL / LINE SEPARATOR line
+        # terminators Java $ matches before, and a non-BMP code point
+        (24, passing.replace("the quick", "\u0130STANBUL quick")
+             + "\nthe d\u0131\u015fta k\u0131z and words here are many for it."),
+        (25, passing + "\nthis line mentions JAVASCR\u0130PT and some more words."),
+        (26, passing + "\nthe stra\u00dfe and the GRO\u00dfE words here flow nicely."),
+        (27, passing + "\nthe \u039f\u0394\u039f\u03a3 and \u03a3\u039f\u03a6\u039f\u03a3 "
+             "words here flow \u039d\u039f\u039c\u039f\u03a3."),
+        (28, passing.replace("brown", "caf\u0065\u0301 brown")),
+        (29, passing.replace(" fox ", "\u2003fox\u3000")),
+        (30, passing.replace("today ok.\n", "today ok.\u2028\n")
+             .replace("to count.\n", "to count.\u0085\n")),
+        (31, "\u00a0" + passing.replace("lazy dog", "lazy dog\u2028cat") + "\u00a0"),
+        (32, passing + "\nthe emoji \U0001F600 line has the many usual words here."),
+        (33, "\u3000" + passing + "\u2003"),
     ]
     return rows
 
 
 def test_clean_front_kernel_identical_edge_corpus(spark):
-    """kernel='arrow' (fused mapInPandas front) must be ROW-IDENTICAL
-    to kernel='jvm' (the barrier-pinned expression chain) on the
-    adversarial corpus — ids, cleaned text, token counts and rounded
-    classifier scores (the r19 IVF-kernel equivalence discipline).
+    """clean_filter_survivors (fused mapInPandas front) must be
+    ROW-IDENTICAL to jvm_reference.clean_filter_survivors (the
+    barrier-pinned expression chain) on the adversarial corpus — ids,
+    cleaned text, token counts and rounded classifier scores (the r19
+    IVF-kernel equivalence discipline).
     Full-fixture equivalence (sf0.01 + sf0.1 pageified documents,
     row-identical) is recorded in OPTIMIZATION_r20.md."""
+    import jvm_reference as ref
     from build_datawarehouse_demo_spark.plans.training_data import (
         clean_filter_survivors,
     )
@@ -1176,22 +1196,21 @@ def test_clean_front_kernel_identical_edge_corpus(spark):
              clf_dim=16, clf_threshold=0.0),  # permissive: more rows pass
     ):
         jvm = sorted(
-            tuple(r) for r in clean_filter_survivors(df, kernel="jvm", **kw).collect()
+            tuple(r) for r in ref.clean_filter_survivors(df, **kw).collect()
         )
-        arw = sorted(
-            tuple(r) for r in clean_filter_survivors(df, kernel="arrow", **kw).collect()
-        )
+        arw = sorted(tuple(r) for r in clean_filter_survivors(df, **kw).collect())
         assert jvm == arw, (kw, jvm[:3], arw[:3])
     # the permissive run must actually exercise survivors
     assert len(arw) > 0
 
 
 def test_featured_front_kernel_identical_edge_corpus(spark):
-    """_featured_survivors(kernel='arrow') must be ROW-IDENTICAL to
-    kernel='jvm' — including the UNROUNDED `quality` doubles (exact
+    """_featured_survivors (fused mapInPandas front) must be
+    ROW-IDENTICAL to jvm_reference.featured_survivors — including the UNROUNDED `quality` doubles (exact
     IEEE op-order replay) and the post-kernel exact-dedup window.
     Full-fixture equivalence (sf0.01 + sf0.1 documents, row-identical)
     is recorded in OPTIMIZATION_r20.md."""
+    import jvm_reference as ref
     from build_datawarehouse_demo_spark.plans.training_data import (
         _featured_survivors,
     )
@@ -1209,19 +1228,23 @@ def test_featured_front_kernel_identical_edge_corpus(spark):
         # avg token length boundaries (3 and 8)
         (105, "abc " * 40 + "the of"),
         (106, "abcdefgh " * 40 + "the of"),
+        # non-ASCII exact-dedup fodder: Greek final sigma lowers to the
+        # same cleaned text as its lowercase twin
+        (107, "\u039f\u0394\u039f\u03a3 the quick brown fox jumps over the lazy dog."),
+        (108, "\u03bf\u03b4\u03bf\u03c2 the quick brown fox jumps over the lazy dog."),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for min_tokens, min_quality in ((5, 0.3), (1, 0.0), (0, 0.5)):
         jvm = sorted(
             tuple(r)
-            for r in _featured_survivors(
-                df, "doc_id", "text", min_tokens, min_quality, kernel="jvm"
+            for r in ref.featured_survivors(
+                df, "doc_id", "text", min_tokens, min_quality
             ).collect()
         )
         arw = sorted(
             tuple(r)
             for r in _featured_survivors(
-                df, "doc_id", "text", min_tokens, min_quality, kernel="arrow"
+                df, "doc_id", "text", min_tokens, min_quality
             ).collect()
         )
         assert jvm == arw, ((min_tokens, min_quality), jvm[:3], arw[:3])
