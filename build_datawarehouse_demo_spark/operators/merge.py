@@ -80,13 +80,26 @@ def _exists(spark: SparkSession, path: str):
     return p.getFileSystem(hconf).exists(p)
 
 
+def _partition_dir(spark: SparkSession, partition_col: str, value) -> str:
+    """The ``col=value`` directory name partitionBy writes, built by
+    Spark's own partition-path escaping: ``/``, ``=``, ``%`` and other
+    reserved characters are percent-encoded, and NULL maps to
+    ``__HIVE_DEFAULT_PARTITION__``."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    return utils.getPartitionPathString(
+        partition_col, None if value is None else str(value)
+    )
+
+
 def _delete_partition_dirs(
     spark: SparkSession, base: str, partition_col: str, values
 ) -> None:
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
     for v in values:
-        p = jvm.org.apache.hadoop.fs.Path(f"{base}/{partition_col}={v}")
+        p = jvm.org.apache.hadoop.fs.Path(
+            f"{base}/{_partition_dir(spark, partition_col, v)}"
+        )
         fs = p.getFileSystem(hconf)
         fs.delete(p, True)
 
@@ -103,10 +116,11 @@ def _anchor_schema_if_emptied(
     ``spark.read.parquet`` then fails UNABLE_TO_INFER_SCHEMA and the
     table is bricked for every downstream reader (r20, found by the
     hypothesis merge model test). When no data file remains, write one
-    EMPTY schema-bearing parquet file into a ``part=<part_val>``
-    directory (footer only — zero rows, no partition column, exactly
-    the sibling-file layout), so the table reads back as its empty
-    self and the next merge's target scan sees the right schema.
+    EMPTY schema-bearing parquet file into the (escaped)
+    ``part=<part_val>`` directory (footer only — zero rows, no
+    partition column, exactly the sibling-file layout), so the table
+    reads back as its empty self and the next merge's target scan
+    sees the right schema.
     Local-filesystem targets only (the sandbox case) — on object
     stores keep a catalog/manifest instead (S3A_CHECKLIST)."""
     jvm = spark._jvm
@@ -134,7 +148,7 @@ def _anchor_schema_if_emptied(
         [f for f in template.schema.fields if f.name != partition_col]
     )
     tbl = spark.createDataFrame([], data_schema).toArrow()
-    d = os.path.join(uri.getPath(), f"{partition_col}={part_val}")
+    d = os.path.join(uri.getPath(), _partition_dir(spark, partition_col, part_val))
     os.makedirs(d, exist_ok=True)
     papq.write_table(tbl, os.path.join(d, "part-00000-empty-anchor.parquet"))
 

@@ -780,6 +780,11 @@ def default_classifier_weights(dim: int, seed: int = 0) -> list[float]:
 #: source for quality_classifier_score and the fused clean-front kernel
 CLASSIFIER_BIAS = 0.0
 
+#: per-task cap on the fused clean-front kernel's token -> bucket
+#: cache: past it the cache is cleared and refills, so a task holds at
+#: most this many entries however large the token vocabulary
+_CLEAN_BUCKET_CACHE_MAX = 1 << 17
+
 
 def quality_classifier_score(
     df: DataFrame,
@@ -1483,7 +1488,8 @@ def _make_clean_front_kernel(
     repetition -> linear classifier) for
     ``plans.training_data.clean_filter_survivors``. Thresholds the
     front does not expose come from the batteries' single-source
-    module constants (GOPHER_*, CLASSIFIER_BIAS).
+    module constants (GOPHER_*, CLASSIFIER_BIAS); the per-task token
+    -> bucket cache is cleared at _CLEAN_BUCKET_CACHE_MAX entries.
 
     Returned as a CLOSURE so cloudpickle ships it by value to the
     executor Python workers (the similarity._make_kernel_helpers
@@ -1537,6 +1543,7 @@ def _make_clean_front_kernel(
     line_terms = '\n\r\x85\u2028\u2029'
     caps_top = tuple(float(c) for c in max_top_gram_char_frac)
     weights = [float(w) for w in clf_weights]
+    cache_max = _CLEAN_BUCKET_CACHE_MAX
     n_sent_min = int(min_sentences)
     min_wpl = int(min_words_per_line)
 
@@ -1659,6 +1666,8 @@ def _make_clean_front_kernel(
             b = cache.get(t)
             if b is None:
                 b = int(hashlib.md5(f"0:{t}".encode()).hexdigest()[:8], 16) % clf_dim
+                if len(cache) >= cache_max:
+                    cache.clear()
                 cache[t] = b
             return b
 

@@ -686,6 +686,231 @@ def _verify_jaccard_pairs(
     )
 
 
+def _check_keep_policy(
+    state: dict, rank_col: str | None, soft_weights: bool, op: str
+) -> None:
+    """Reject an apply or migration whose keep policy differs from the
+    one the state was built with — the policy is part of the state's
+    identity (a neardup state never carries soft_weights)."""
+    for name, built, called in (
+        ("rank_col", state.get("rank_col"), rank_col),
+        ("soft_weights", bool(state.get("soft_weights")), bool(soft_weights)),
+    ):
+        if built != called:
+            raise ValueError(
+                f"keep-policy mismatch: state was built with "
+                f"{name}={built!r}, {op} called with {called!r} — the "
+                f"policy is part of the state's identity"
+            )
+
+
+def _component_labeled(
+    frame: DataFrame, comp_r: DataFrame, id_col: str, label: str = "__cid"
+) -> DataFrame:
+    """Attach each row's star-component label (the component min; a
+    singleton absent from the pair graph labels itself) as ``label``.
+    ``comp_r`` is connected_components_star output with ``node``
+    renamed to ``id_col``."""
+    return (
+        frame.join(comp_r, id_col, "left")
+        .withColumn(label, F.coalesce(F.col("component"), F.col(id_col)))
+        .drop("component")
+    )
+
+
+def _span_delta_refresh(
+    *,
+    added_docs: DataFrame,
+    added_ids: DataFrame,
+    dropped_ids: DataFrame,
+    old_grams: DataFrame,
+    rep_feats: DataFrame,
+    reuse_ids: DataFrame,
+    old_output: DataFrame,
+    comp_r: DataFrame | None,
+    relabel,
+    id_col: str,
+    span_window: int,
+    span_min_docs: int,
+    val_frac: float,
+    test_frac: float,
+) -> tuple[DataFrame, DataFrame]:
+    """Refresh the neardup span stage after the REP set changed — the
+    shared delta machinery of training_data_neardup_apply (batch reps
+    in, displaced reps out) and migrate_training_data_neardup_banding
+    (the rep-set diff of a re-sign). Returns (rep_grams, output).
+
+    Gram stats change ONLY for digests of ``added_docs``' grams (the
+    entering reps' (id, cleaned) rows) or of ``dropped_ids``' stored
+    grams. Affected documents — any current rep sharing a changed
+    digest, plus every ``added_ids`` rep — rebuild with
+    remove_spans_given_owners against stats over the REFRESHED global
+    gram table restricted to their digests (``rep_feats`` holds the
+    current reps' survivor rows); every other row of ``old_output``
+    restricted to ``reuse_ids`` is reused verbatim, since counts and
+    owners move only via added/dropped reps' grams and those digests
+    are all marked.
+
+    ``comp_r`` is None under the min-id policy (every rep IS its
+    component label). Under keep-best it is the refreshed component
+    map: recomputed rows take their component min as label, and the
+    reused rows that ``relabel`` (a filter over (id, component_id,
+    __cid) rows) selects re-emit with the refreshed label — a merge can
+    lower a kept winner's component min without touching its text."""
+    from build_datawarehouse_demo_spark.operators.dedup import (
+        remove_spans_given_owners,
+        _window_gram_rows,
+    )
+    from build_datawarehouse_demo_spark.operators.sampling import train_val_test_split
+
+    added_grams = _window_gram_rows(
+        added_docs, id_col, "cleaned", span_window
+    ).localCheckpoint()
+    dropped_grams = old_grams.join(dropped_ids, id_col)
+    # lazy: three consumers below each re-scan the stored gram blocks
+    # through the (broadcast-small) anti-join instead of paying an
+    # eager corpus-scale copy of the biggest state frame
+    grams_union = old_grams.join(dropped_ids, id_col, "left_anti").union(added_grams)
+    changed_digests = (
+        added_grams.select("gram_md5")
+        .union(dropped_grams.select("gram_md5"))
+        .distinct()
+    )
+    affected_ids = (
+        grams_union.join(changed_digests, "gram_md5")
+        .select(id_col)
+        .union(added_ids)
+        .distinct()
+        .localCheckpoint()
+    )
+    # stats for every digest an affected doc contains, over the
+    # REFRESHED global gram table (two digest-keyed semi-joins)
+    digests_needed = (
+        grams_union.join(affected_ids, id_col).select("gram_md5").distinct()
+    )
+    owners = (
+        grams_union.join(digests_needed, "gram_md5")
+        .groupBy("gram_md5")
+        .agg(F.countDistinct(id_col).alias("__nd"), F.min(id_col).alias("__owner"))
+        .filter(F.col("__nd") >= span_min_docs)
+        .select("gram_md5", "__owner")
+    )
+    affected_docs = rep_feats.join(affected_ids, id_col).localCheckpoint()
+    rebuilt = remove_spans_given_owners(
+        affected_docs.select(id_col, "cleaned"), owners, id_col, "cleaned", span_window
+    )
+    aff = affected_docs.select(id_col, "pred_lang", "quality")
+    if comp_r is None:
+        cid = F.col(id_col).alias("component_id")
+    else:
+        cid = F.col("__cid").alias("component_id")
+        aff = _component_labeled(aff, comp_r, id_col)
+    recomputed = aff.join(rebuilt, id_col).select(
+        id_col,
+        "pred_lang",
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        "quality",
+        cid,
+        "cleaned_text",
+        "n_tokens_removed",
+    )
+    recomputed_out = train_val_test_split(
+        recomputed, id_col, val_frac=val_frac, test_frac=test_frac
+    ).localCheckpoint()  # the span-rebuild DELTA — the only heavy subtree
+    reused = old_output.join(reuse_ids, id_col, "left_semi").join(
+        affected_ids, id_col, "left_anti"
+    )
+    if comp_r is not None:
+        # a projection over the relabeled rows only — never a span rebuild
+        ru_lab = (
+            relabel(
+                _component_labeled(
+                    reused.select(id_col, "component_id"), comp_r, id_col
+                )
+            )
+            .select(id_col, "__cid")
+            .localCheckpoint()
+        )
+        relabeled = reused.drop("component_id").join(ru_lab, id_col).select(
+            id_col,
+            "pred_lang",
+            "n_tokens",
+            "quality",
+            F.col("__cid").alias("component_id"),
+            "cleaned_text",
+            "n_tokens_removed",
+            "split",
+        )
+        reused = reused.join(
+            ru_lab.select(id_col), id_col, "left_anti"
+        ).unionByName(relabeled)
+    return grams_union, reused.unionByName(recomputed_out)
+
+
+def _finish_fold(
+    result: dict,
+    new_surv: DataFrame,
+    retire_scope: set | None,
+    migrate,
+    migrate_kwargs: dict,
+    id_col: str,
+    compact_to: str | None,
+    compact_path: str | None,
+    compact_keep_superseded: bool,
+    compact_retire_fold_rdds: bool,
+) -> dict:
+    """The post-fold tail both curation applies share: maintain the
+    opt-in survivor counter ``result`` carries over from the pre-fold
+    state, run the frozen-banding migration hook (``migrate`` is the
+    state's migrate_*_banding, or None when the caller did not ask for
+    migration), then compact. ``retire_scope`` is the persistent-RDD
+    snapshot taken before the fold (None unless compacting)."""
+    if result.get("n_survivors") is not None:
+        # O(batch): new_surv is checkpoint-backed, so this counts the
+        # fold delta's cached blocks — the incremental twin of a
+        # corpus-sized survivors.count() per fold (r16 ADVICE). The
+        # key is opt-in: seed it once (state["n_survivors"] =
+        # state["survivors"].count()) and every fold maintains it.
+        result["n_survivors"] += new_surv.count()
+    if migrate is not None:
+        # close the frozen-banding staleness loop (r16 VERDICT item 4):
+        # a no-op between minhash_auto_params boundaries; at a boundary
+        # the state is re-signed at the grown corpus size and the
+        # replaced frames' blocks retired (unless the caller keeps the
+        # pre-fold dict readable).
+        n = result.get("n_survivors")
+        if n is None:
+            # observable fallback (r17 ADVICE): without the seeded
+            # counter this pays a corpus-sized count EVERY fold — the
+            # exact cost the r16 incremental counter removed
+            log.warning(
+                "migrate_banding=True without a seeded n_survivors "
+                "counter: falling back to a corpus-sized "
+                "survivors.count() this fold. Seed it once with "
+                'state["n_survivors"] = state["survivors"].count() '
+                "to make the per-fold cost O(batch)."
+            )
+            n = result["survivors"].count()
+        migrated = migrate(result, corpus_n=n, id_col=id_col, **migrate_kwargs)
+        if migrated is not result:
+            if not compact_keep_superseded:
+                retire_superseded_state(result, migrated)
+            result = migrated
+    if compact_to is None:
+        return result
+    compacted = compact_state(
+        result,
+        compact_to,
+        base_path=compact_path,
+        id_col=id_col,
+        unpersist_superseded=not compact_keep_superseded,
+    )
+    # hidden fold intermediates (not leaves of any result frame)
+    if compact_retire_fold_rdds:
+        _retire_persistent_rdds_since(new_surv.sparkSession, retire_scope)
+    return compacted
+
+
 def training_data_neardup_apply(
     new_df: DataFrame,
     state: dict,
@@ -817,18 +1042,10 @@ def training_data_neardup_apply(
     """
     from build_datawarehouse_demo_spark.operators.dedup import (
         connected_components_star,
-        remove_spans_given_owners,
         shingle_arrays,
-        _window_gram_rows,
     )
-    from build_datawarehouse_demo_spark.operators.sampling import train_val_test_split
 
-    if state.get("rank_col") != rank_col:
-        raise ValueError(
-            f"keep-policy mismatch: state was built with "
-            f"rank_col={state.get('rank_col')!r}, apply called with "
-            f"{rank_col!r} — the policy is part of the state's identity"
-        )
+    _check_keep_policy(state, rank_col, False, "apply")
     retire_scope = (
         _persistent_rdd_ids(new_df.sparkSession) if compact_to is not None else None
     )
@@ -836,8 +1053,6 @@ def training_data_neardup_apply(
     old_surv = state["survivors"]
     old_pairs = state["pairs"]
     old_rep_ids = state["rep_ids"]
-    old_grams = state["rep_grams"]
-    old_output = state["output"]
 
     # -- exact stage: batch-internal dedup, then digest anti-join
     #    against the STORED survivor digest table (16-byte keys only —
@@ -903,21 +1118,14 @@ def training_data_neardup_apply(
         # + the batch's survivors; one slim min_by picks each winner
         from build_datawarehouse_demo_spark.operators.dedup import keep_best_key
 
-        def _labeled(frame: DataFrame) -> DataFrame:
-            return (
-                frame.join(compR, id_col, "left")
-                .withColumn(
-                    "__cid", F.coalesce(F.col("component"), F.col(id_col))
-                )
-                .drop("component")
-            )
-
-        new_lab = _labeled(new_surv.select(id_col, rank_col))
+        new_lab = _component_labeled(new_surv.select(id_col, rank_col), compR, id_col)
         touched_labels = new_lab.select("__cid").distinct().localCheckpoint()
-        old_keep_lab = _labeled(
+        old_keep_lab = _component_labeled(
             old_surv.join(old_rep_ids, id_col, "left_semi").select(
                 id_col, rank_col
-            )
+            ),
+            compR,
+            id_col,
         ).join(touched_labels, "__cid", "left_semi")
         cand = old_keep_lab.unionByName(
             new_lab.join(touched_labels, "__cid", "left_semi")
@@ -945,172 +1153,52 @@ def training_data_neardup_apply(
         )
 
     # -- span refresh: delta the gram stats, rebuild only affected docs
-    new_grams = _window_gram_rows(
-        new_surv.join(new_rep_ids, id_col).select(id_col, "cleaned"),
-        id_col,
-        "cleaned",
-        span_window,
-    ).localCheckpoint()
-    dropped_grams = old_grams.join(dropped_old, id_col)
-    kept_old_grams = old_grams.join(dropped_old, id_col, "left_anti")
-    # lazy: three consumers below each re-scan the stored gram blocks
-    # through the (broadcast-small) anti-join instead of paying an
-    # eager corpus-scale copy of the biggest state frame
-    grams_union = kept_old_grams.union(new_grams)
-    changed_digests = (
-        new_grams.select("gram_md5").union(dropped_grams.select("gram_md5")).distinct()
+    # (under keep-best, a kept winner in a TOUCHED component may carry
+    # a stale label — a merge lowers the component min without
+    # changing its text or gram stats — and is re-emitted relabeled)
+    rep_grams, output = _span_delta_refresh(
+        added_docs=new_surv.join(new_rep_ids, id_col).select(id_col, "cleaned"),
+        added_ids=new_rep_ids,
+        dropped_ids=dropped_old,
+        old_grams=state["rep_grams"],
+        rep_feats=old_surv.join(kept_old_rep_ids, id_col).unionByName(
+            new_surv.join(new_rep_ids, id_col)
+        ),
+        reuse_ids=kept_old_rep_ids,
+        old_output=state["output"],
+        comp_r=None if rank_col is None else compR,
+        relabel=lambda f: f.join(touched_labels, "__cid", "left_semi"),
+        id_col=id_col,
+        span_window=span_window,
+        span_min_docs=span_min_docs,
+        val_frac=val_frac,
+        test_frac=test_frac,
     )
-    affected_ids = (
-        grams_union.join(changed_digests, "gram_md5")
-        .select(id_col)
-        .union(new_rep_ids)
-        .distinct()
-        .localCheckpoint()
-    )
-    # stats for every digest an affected doc contains, over the
-    # REFRESHED global gram table (two digest-keyed semi-joins)
-    digests_needed = (
-        grams_union.join(affected_ids, id_col).select("gram_md5").distinct()
-    )
-    owners = (
-        grams_union.join(digests_needed, "gram_md5")
-        .groupBy("gram_md5")
-        .agg(F.countDistinct(id_col).alias("__nd"), F.min(id_col).alias("__owner"))
-        .filter(F.col("__nd") >= span_min_docs)
-        .select("gram_md5", "__owner")
-    )
-    all_rep_feats = old_surv.join(kept_old_rep_ids, id_col).unionByName(
-        new_surv.join(new_rep_ids, id_col)
-    )
-    affected_docs = all_rep_feats.join(affected_ids, id_col).localCheckpoint()
-    rebuilt = remove_spans_given_owners(
-        affected_docs.select(id_col, "cleaned"), owners, id_col, "cleaned", span_window
-    )
-    if rank_col is None:
-        # min-id policy: every rep IS its component's label
-        cid = F.col(id_col).alias("component_id")
-        aff = affected_docs.select(id_col, "pred_lang", "quality")
-    else:
-        # keep-best: the label is the component min, not the winner's
-        # own id — attach it from the refreshed component map
-        cid = F.col("__cid").alias("component_id")
-        aff = affected_docs.select(id_col, "pred_lang", "quality").join(
-            compR, id_col, "left"
-        ).withColumn(
-            "__cid", F.coalesce(F.col("component"), F.col(id_col))
-        ).drop("component")
-    recomputed = (
-        aff.join(rebuilt, id_col)
-        .select(
-            id_col,
-            "pred_lang",
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-            "quality",
-            cid,
-            "cleaned_text",
-            "n_tokens_removed",
-        )
-    )
-    recomputed_out = train_val_test_split(
-        recomputed, id_col, val_frac=val_frac, test_frac=test_frac
-    ).localCheckpoint()  # the span-rebuild DELTA — the only heavy subtree here
-    reused = old_output.join(kept_old_rep_ids, id_col, "left_semi").join(
-        affected_ids, id_col, "left_anti"
-    )
-    if rank_col is not None:
-        # a kept winner in a TOUCHED component may carry a stale label
-        # (a merge lowers the component min without changing its text
-        # or gram stats): re-emit those rows with the refreshed label
-        # — a touched-scale projection, never a span rebuild
-        ru_lab = (
-            reused.select(id_col)
-            .join(compR, id_col, "left")
-            .withColumn("__cid", F.coalesce(F.col("component"), F.col(id_col)))
-            .drop("component")
-            .join(touched_labels, "__cid", "left_semi")
-            .localCheckpoint()
-        )
-        relabeled = reused.drop("component_id").join(ru_lab, id_col).select(
-            id_col,
-            "pred_lang",
-            "n_tokens",
-            "quality",
-            F.col("__cid").alias("component_id"),
-            "cleaned_text",
-            "n_tokens_removed",
-            "split",
-        )
-        reused = reused.join(
-            ru_lab.select(id_col), id_col, "left_anti"
-        ).unionByName(relabeled)
-    output = reused.unionByName(recomputed_out)
-    refreshed = _refreshed_collapse_state(state, delta, id_col)
-    result = {
-        "bands": bands,
-        "rows": rows,
-        "survivors": old_surv.unionByName(new_surv),
-        "band_keys": refreshed["band_keys"],
-        "dg_members": refreshed["dg_members"],
-        "rep_digests": refreshed["rep_digests"],
-        "text_digests": state["text_digests"].union(
+    # bands/rows, the keep-policy tag and the survivor counter carry
+    # over from the state
+    result = dict(
+        state,
+        **_refreshed_collapse_state(state, delta, id_col),
+        survivors=old_surv.unionByName(new_surv),
+        text_digests=state["text_digests"].union(
             new_surv.select(F.md5(F.col("cleaned")).alias("__digest"))
         ),
-        "pairs": pairs_all,
-        "rep_ids": kept_old_rep_ids.union(new_rep_ids),
-        "rep_grams": grams_union,
-        "output": output,
-    }
-    if rank_col is not None:
-        result["rank_col"] = rank_col
-    if state.get("n_survivors") is not None:
-        # O(batch): counts the checkpoint-backed fold delta, not the
-        # corpus (r16 ADVICE) — opt-in incremental survivor counter,
-        # see clean_filter_dedup_apply.
-        result["n_survivors"] = state["n_survivors"] + new_surv.count()
-    if migrate_banding:
-        # batch twin of the streaming sink's per-fold migration hook
-        # (r16 VERDICT item 4); no-op between auto-params boundaries.
-        n = result.get("n_survivors")
-        if n is None:
-            # observable fallback (r17 ADVICE) — see
-            # clean_filter_dedup_apply
-            log.warning(
-                "migrate_banding=True without a seeded n_survivors "
-                "counter: falling back to a corpus-sized "
-                "survivors.count() this fold. Seed it once with "
-                'state["n_survivors"] = state["survivors"].count() '
-                "to make the per-fold cost O(batch)."
-            )
-            n = result["survivors"].count()
-        migrated = migrate_training_data_neardup_banding(
-            result,
-            corpus_n=n,
-            id_col=id_col,
-            shingle_k=shingle_k,
-            jaccard_threshold=jaccard_threshold,
-            span_window=span_window,
-            span_min_docs=span_min_docs,
-            val_frac=val_frac,
-            test_frac=test_frac,
-            rank_col=rank_col,
-        )
-        if migrated is not result:
-            if not compact_keep_superseded:
-                retire_superseded_state(result, migrated)
-            result = migrated
-    if compact_to is not None:
-        compacted = compact_state(
-            result,
-            compact_to,
-            base_path=compact_path,
-            id_col=id_col,
-            unpersist_superseded=not compact_keep_superseded,
-        )
-        # hidden fold intermediates (not leaves of any result frame)
-        if compact_retire_fold_rdds:
-            _retire_persistent_rdds_since(new_df.sparkSession, retire_scope)
-        return compacted
-    return result
+        pairs=pairs_all,
+        rep_ids=kept_old_rep_ids.union(new_rep_ids),
+        rep_grams=rep_grams,
+        output=output,
+    )
+    return _finish_fold(
+        result, new_surv, retire_scope,
+        migrate_training_data_neardup_banding if migrate_banding else None,
+        dict(
+            shingle_k=shingle_k, jaccard_threshold=jaccard_threshold,
+            span_window=span_window, span_min_docs=span_min_docs,
+            val_frac=val_frac, test_frac=test_frac, rank_col=rank_col,
+        ),
+        id_col, compact_to, compact_path,
+        compact_keep_superseded, compact_retire_fold_rdds,
+    )
 
 
 def prepare_training_data_neardup_incremental(
@@ -1642,19 +1730,7 @@ def clean_filter_dedup_apply(
         train_val_test_split,
     )
 
-    if state.get("rank_col") != rank_col:
-        raise ValueError(
-            f"keep-policy mismatch: state was built with "
-            f"rank_col={state.get('rank_col')!r}, apply called with "
-            f"{rank_col!r} — the policy is part of the state's identity"
-        )
-    if bool(state.get("soft_weights")) != bool(soft_weights):
-        raise ValueError(
-            f"keep-policy mismatch: state was built with "
-            f"soft_weights={bool(state.get('soft_weights'))}, apply called "
-            f"with {bool(soft_weights)} — the policy is part of the "
-            f"state's identity"
-        )
+    _check_keep_policy(state, rank_col, soft_weights, "apply")
     retire_scope = (
         _persistent_rdd_ids(new_df.sparkSession) if compact_to is not None else None
     )
@@ -1712,13 +1788,11 @@ def clean_filter_dedup_apply(
         # the stored-survivor scan is pruned to exactly those ids);
         # reuse everything else verbatim.
         compR = comp.withColumnRenamed("node", id_col)
-        new_lab = (
-            new_surv.select(id_col, "n_ws_tokens", "clf_score")
-            .join(compR, id_col, "left")
-            .withColumn(
-                "component_id", F.coalesce(F.col("component"), F.col(id_col))
-            )
-            .drop("component")
+        new_lab = _component_labeled(
+            new_surv.select(id_col, "n_ws_tokens", "clf_score"),
+            compR,
+            id_col,
+            "component_id",
         )
         touched = new_lab.select("component_id").distinct().localCheckpoint()
         # old members of touched components: every one is IN the pair
@@ -1786,14 +1860,7 @@ def clean_filter_dedup_apply(
         compR = comp.withColumnRenamed("node", id_col)
 
         def _labeled(frame: DataFrame) -> DataFrame:
-            return (
-                frame.join(compR, id_col, "left")
-                .withColumn(
-                    "component_id",
-                    F.coalesce(F.col("component"), F.col(id_col)),
-                )
-                .drop("component")
-            )
+            return _component_labeled(frame, compR, id_col, "component_id")
 
         new_lab = _labeled(new_surv.select(id_col, "n_ws_tokens", "clf_score"))
         touched = new_lab.select("component_id").distinct().localCheckpoint()
@@ -1834,77 +1901,26 @@ def clean_filter_dedup_apply(
             .localCheckpoint()
         )
         reused = old_output.join(dropped_old, id_col, "left_anti")
-    output = reused.unionByName(new_out)
-    refreshed = _refreshed_collapse_state(state, delta, id_col)
-    result = {
-        "bands": bands,
-        "rows": rows,
-        "survivors": old_surv.unionByName(new_surv),
-        "band_keys": refreshed["band_keys"],
-        "dg_members": refreshed["dg_members"],
-        "rep_digests": refreshed["rep_digests"],
-        "pairs": pairs_all,
-        "output": output,
-    }
-    if rank_col is not None:
-        result["rank_col"] = rank_col
-    if soft_weights:
-        result["soft_weights"] = True
-    if state.get("n_survivors") is not None:
-        # O(batch): new_surv is checkpoint-backed, so this counts the
-        # fold delta's cached blocks — the incremental twin of a
-        # corpus-sized survivors.count() per fold (r16 ADVICE). The
-        # key is opt-in: seed it once (state["n_survivors"] =
-        # state["survivors"].count()) and every fold maintains it.
-        result["n_survivors"] = state["n_survivors"] + new_surv.count()
-    if migrate_banding:
-        # close the frozen-banding staleness loop in the batch path,
-        # symmetric with the streaming sink's per-fold hook (r16
-        # VERDICT item 4): a no-op between minhash_auto_params
-        # boundaries; at a boundary the state is re-signed at the
-        # grown corpus size and the replaced frames' blocks retired
-        # (unless the caller keeps the pre-fold dict readable).
-        n = result.get("n_survivors")
-        if n is None:
-            # observable fallback (r17 ADVICE): without the seeded
-            # counter this pays a corpus-sized count EVERY fold — the
-            # exact cost the r16 incremental counter removed
-            log.warning(
-                "migrate_banding=True without a seeded n_survivors "
-                "counter: falling back to a corpus-sized "
-                "survivors.count() this fold. Seed it once with "
-                'state["n_survivors"] = state["survivors"].count() '
-                "to make the per-fold cost O(batch)."
-            )
-            n = result["survivors"].count()
-        migrated = migrate_clean_filter_banding(
-            result,
-            corpus_n=n,
-            id_col=id_col,
-            shingle_k=shingle_k,
-            jaccard_threshold=jaccard_threshold,
-            val_frac=val_frac,
-            test_frac=test_frac,
-            rank_col=rank_col,
+    # bands/rows, the keep-policy tags and the survivor counter carry
+    # over from the state
+    result = dict(
+        state,
+        **_refreshed_collapse_state(state, delta, id_col),
+        survivors=old_surv.unionByName(new_surv),
+        pairs=pairs_all,
+        output=reused.unionByName(new_out),
+    )
+    return _finish_fold(
+        result, new_surv, retire_scope,
+        migrate_clean_filter_banding if migrate_banding else None,
+        dict(
+            shingle_k=shingle_k, jaccard_threshold=jaccard_threshold,
+            val_frac=val_frac, test_frac=test_frac, rank_col=rank_col,
             soft_weights=soft_weights,
-        )
-        if migrated is not result:
-            if not compact_keep_superseded:
-                retire_superseded_state(result, migrated)
-            result = migrated
-    if compact_to is not None:
-        compacted = compact_state(
-            result,
-            compact_to,
-            base_path=compact_path,
-            id_col=id_col,
-            unpersist_superseded=not compact_keep_superseded,
-        )
-        # hidden fold intermediates (not leaves of any result frame)
-        if compact_retire_fold_rdds:
-            _retire_persistent_rdds_since(new_df.sparkSession, retire_scope)
-        return compacted
-    return result
+        ),
+        id_col, compact_to, compact_path,
+        compact_keep_superseded, compact_retire_fold_rdds,
+    )
 
 
 def prepare_clean_filter_dedup_incremental(
@@ -1927,21 +1943,22 @@ def prepare_clean_filter_dedup_incremental(
 
 def _rebanded_collapse_frames(
     state: dict,
-    new_bands: int,
-    new_rows: int,
+    corpus_n: int,
     id_col: str,
     shingle_k: int,
     threshold: float,
-) -> dict:
-    """Re-sign the state's digest-group REPS at a new (bands, rows) and
-    recompute the rep-level pair set — the shared core of a banding
-    migration. Reps-only cost: ONE distinct-content scan (survivors
+) -> dict | None:
+    """Re-sign the state's digest-group REPS at
+    ``minhash_auto_params(corpus_n)`` and recompute the rep-level pair
+    set — the shared core of a banding migration. Reps-only cost: ONE
+    distinct-content scan (survivors
     semi-joined to the rep ids, re-shingled), one signature pass over
     reps, one banded self-join, one verify, one expansion through the
     stored member map. The member map, digests and survivors are
     untouched — no member is ever re-shingled.
 
-    Returns {band_keys, pairs}, both checkpointed. The recomputed
+    Returns {bands, rows, band_keys, pairs} (frames checkpointed), or
+    None when the auto params equal the state's. The recomputed
     pairs are exactly what a full rebuild at the new banding verifies:
     candidacy and jaccard depend only on the shingle set (the digest-
     collapse losslessness argument), and within-group pairs regenerate
@@ -1949,10 +1966,14 @@ def _rebanded_collapse_frames(
     in every band)."""
     from build_datawarehouse_demo_spark.operators.dedup import (
         lsh_band_keys,
+        minhash_auto_params,
         minhash_signatures_from_arrays,
         shingle_arrays,
     )
 
+    new_bands, new_rows = minhash_auto_params(corpus_n, threshold=threshold)
+    if (new_bands, new_rows) == (state["bands"], state["rows"]):
+        return None
     rep_ids = state["rep_digests"].select(id_col)
     rep_sh = shingle_arrays(
         state["survivors"].join(rep_ids, id_col, "left_semi"),
@@ -1978,7 +1999,12 @@ def _rebanded_collapse_frames(
     pairs = _expand_rep_pairs(
         rep_pairs, self_reps, state["dg_members"], id_col, threshold
     ).localCheckpoint()
-    return {"band_keys": band_keys, "pairs": pairs}
+    return {
+        "bands": new_bands,
+        "rows": new_rows,
+        "band_keys": band_keys,
+        "pairs": pairs,
+    }
 
 
 def migrate_clean_filter_banding(
@@ -2026,35 +2052,18 @@ def migrate_clean_filter_banding(
     """
     from build_datawarehouse_demo_spark.operators.dedup import (
         connected_components_star,
-        minhash_auto_params,
     )
     from build_datawarehouse_demo_spark.operators.sampling import (
         train_val_test_split,
     )
 
-    if state.get("rank_col") != rank_col:
-        raise ValueError(
-            f"keep-policy mismatch: state was built with "
-            f"rank_col={state.get('rank_col')!r}, migration called with "
-            f"{rank_col!r} — the policy is part of the state's identity"
-        )
-    if bool(state.get("soft_weights")) != bool(soft_weights):
-        raise ValueError(
-            f"keep-policy mismatch: state was built with "
-            f"soft_weights={bool(state.get('soft_weights'))}, migration "
-            f"called with {bool(soft_weights)} — the policy is part of "
-            f"the state's identity"
-        )
-    new_bands, new_rows = minhash_auto_params(
-        corpus_n, threshold=jaccard_threshold
-    )
-    if (new_bands, new_rows) == (state["bands"], state["rows"]):
-        return state
+    _check_keep_policy(state, rank_col, soft_weights, "migration")
     rebanded = _rebanded_collapse_frames(
-        state, new_bands, new_rows, id_col, shingle_k, jaccard_threshold
+        state, corpus_n, id_col, shingle_k, jaccard_threshold
     )
-    pairs = rebanded["pairs"]
-    comp = connected_components_star(pairs)
+    if rebanded is None:
+        return state
+    comp = connected_components_star(rebanded["pairs"])
     if soft_weights:
         rows_out = _clean_soft_rows(state["survivors"], comp, id_col)
         out_cols = (
@@ -2071,23 +2080,9 @@ def migrate_clean_filter_banding(
         .select(*out_cols)
         .localCheckpoint()
     )
-    out = {
-        "bands": new_bands,
-        "rows": new_rows,
-        "survivors": state["survivors"],
-        "band_keys": rebanded["band_keys"],
-        "dg_members": state["dg_members"],
-        "rep_digests": state["rep_digests"],
-        "pairs": pairs,
-        "output": output,
-    }
-    if state.get("n_survivors") is not None:
-        out["n_survivors"] = state["n_survivors"]  # survivors untouched
-    if rank_col is not None:
-        out["rank_col"] = rank_col
-    if soft_weights:
-        out["soft_weights"] = True
-    return out
+    # survivors, member maps, the survivor counter and the keep-policy
+    # tags pass through
+    return dict(state, **rebanded, output=output)
 
 
 def migrate_training_data_neardup_banding(
@@ -2111,7 +2106,8 @@ def migrate_training_data_neardup_banding(
     gram statistics are computed over the REP set, and re-banding can
     change that set (components merge under pairs the new banding
     catches; they can split under pairs it misses). The refresh is the
-    apply's span-delta machinery re-aimed at the rep-set diff:
+    apply's span-delta machinery (_span_delta_refresh) re-aimed at the
+    rep-set diff:
 
     - dropped reps (component min fell below them under new pairs) and
       ADDED reps (their component lost its bridging pair) mark their
@@ -2134,34 +2130,18 @@ def migrate_training_data_neardup_banding(
     """
     from build_datawarehouse_demo_spark.operators.dedup import (
         connected_components_star,
-        minhash_auto_params,
-        remove_spans_given_owners,
-        _window_gram_rows,
-    )
-    from build_datawarehouse_demo_spark.operators.sampling import (
-        train_val_test_split,
     )
 
-    if state.get("rank_col") != rank_col:
-        raise ValueError(
-            f"keep-policy mismatch: state was built with "
-            f"rank_col={state.get('rank_col')!r}, migration called with "
-            f"{rank_col!r} — the policy is part of the state's identity"
-        )
-    new_bands, new_rows = minhash_auto_params(
-        corpus_n, threshold=jaccard_threshold
-    )
-    if (new_bands, new_rows) == (state["bands"], state["rows"]):
-        return state
+    _check_keep_policy(state, rank_col, False, "migration")
     rebanded = _rebanded_collapse_frames(
-        state, new_bands, new_rows, id_col, shingle_k, jaccard_threshold
+        state, corpus_n, id_col, shingle_k, jaccard_threshold
     )
-    pairs = rebanded["pairs"]
+    if rebanded is None:
+        return state
     surv = state["survivors"]
     old_rep_ids = state["rep_ids"]
-    old_grams = state["rep_grams"]
 
-    comp = connected_components_star(pairs)
+    comp = connected_components_star(rebanded["pairs"])
     compR = comp.withColumnRenamed("node", id_col)
     if rank_col is None:
         rep_ids = (
@@ -2180,14 +2160,9 @@ def migrate_training_data_neardup_banding(
         # already runs at
         from build_datawarehouse_demo_spark.operators.dedup import keep_best_key
 
-        memb = (
-            surv.select(id_col, rank_col)
-            .join(compR, id_col, "left")
-            .withColumn("__cid", F.coalesce(F.col("component"), F.col(id_col)))
-            .drop("component")
-        )
         rep_ids = (
-            memb.groupBy("__cid")
+            _component_labeled(surv.select(id_col, rank_col), compR, id_col)
+            .groupBy("__cid")
             .agg(
                 F.min_by(F.col(id_col), keep_best_key(rank_col, id_col)).alias(
                     "__keep"
@@ -2199,122 +2174,30 @@ def migrate_training_data_neardup_banding(
     dropped = old_rep_ids.join(rep_ids, id_col, "left_anti").localCheckpoint()
     added = rep_ids.join(old_rep_ids, id_col, "left_anti").localCheckpoint()
 
-    # span refresh over the rep-set diff (the apply's delta machinery)
-    added_grams = _window_gram_rows(
-        surv.join(added, id_col, "left_semi").select(id_col, "cleaned"),
-        id_col,
-        "cleaned",
-        span_window,
-    ).localCheckpoint()
-    dropped_grams = old_grams.join(dropped, id_col)
-    kept_old_grams = old_grams.join(dropped, id_col, "left_anti")
-    grams_union = kept_old_grams.union(added_grams)
-    changed_digests = (
-        added_grams.select("gram_md5")
-        .union(dropped_grams.select("gram_md5"))
-        .distinct()
+    # span refresh over the rep-set diff (the apply's delta machinery);
+    # under keep-best, kept winners whose component LABEL moved under
+    # the new pair set re-emit their stored rows relabeled
+    rep_grams, output = _span_delta_refresh(
+        added_docs=surv.join(added, id_col, "left_semi").select(id_col, "cleaned"),
+        added_ids=added.select(id_col),
+        dropped_ids=dropped,
+        old_grams=state["rep_grams"],
+        rep_feats=surv.join(rep_ids, id_col, "left_semi"),
+        reuse_ids=rep_ids,
+        old_output=state["output"],
+        comp_r=None if rank_col is None else compR,
+        relabel=lambda f: f.filter(F.col("__cid") != F.col("component_id")),
+        id_col=id_col,
+        span_window=span_window,
+        span_min_docs=span_min_docs,
+        val_frac=val_frac,
+        test_frac=test_frac,
     )
-    affected_ids = (
-        grams_union.join(changed_digests, "gram_md5")
-        .select(id_col)
-        .union(added.select(id_col))
-        .distinct()
-        .localCheckpoint()
+    # survivors, member maps, text digests, the survivor counter and
+    # the keep-policy tag pass through
+    return dict(
+        state, **rebanded, rep_ids=rep_ids, rep_grams=rep_grams, output=output
     )
-    digests_needed = (
-        grams_union.join(affected_ids, id_col).select("gram_md5").distinct()
-    )
-    owners = (
-        grams_union.join(digests_needed, "gram_md5")
-        .groupBy("gram_md5")
-        .agg(F.countDistinct(id_col).alias("__nd"), F.min(id_col).alias("__owner"))
-        .filter(F.col("__nd") >= span_min_docs)
-        .select("gram_md5", "__owner")
-    )
-    affected_docs = (
-        surv.join(rep_ids, id_col, "left_semi")
-        .join(affected_ids, id_col)
-        .localCheckpoint()
-    )
-    rebuilt = remove_spans_given_owners(
-        affected_docs.select(id_col, "cleaned"), owners, id_col, "cleaned", span_window
-    )
-    if rank_col is None:
-        cid = F.col(id_col).alias("component_id")
-        aff = affected_docs.select(id_col, "pred_lang", "quality")
-    else:
-        # keep-best: the label is the component min under the NEW
-        # pairs, not the winner's own id
-        cid = F.col("__cid").alias("component_id")
-        aff = (
-            affected_docs.select(id_col, "pred_lang", "quality")
-            .join(compR, id_col, "left")
-            .withColumn("__cid", F.coalesce(F.col("component"), F.col(id_col)))
-            .drop("component")
-        )
-    recomputed = (
-        aff.join(rebuilt, id_col)
-        .select(
-            id_col,
-            "pred_lang",
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-            "quality",
-            cid,
-            "cleaned_text",
-            "n_tokens_removed",
-        )
-    )
-    recomputed_out = train_val_test_split(
-        recomputed, id_col, val_frac=val_frac, test_frac=test_frac
-    ).localCheckpoint()
-    reused = state["output"].join(rep_ids, id_col, "left_semi").join(
-        affected_ids, id_col, "left_anti"
-    )
-    if rank_col is not None:
-        # kept winners whose component LABEL moved under the new pair
-        # set re-emit their stored rows with the refreshed label (a
-        # projection over the changed rows only — never a span rebuild)
-        ru_lab = (
-            reused.select(id_col, "component_id")
-            .join(compR, id_col, "left")
-            .withColumn("__cid", F.coalesce(F.col("component"), F.col(id_col)))
-            .drop("component")
-            .filter(F.col("__cid") != F.col("component_id"))
-            .select(id_col, "__cid")
-            .localCheckpoint()
-        )
-        relabeled = reused.drop("component_id").join(ru_lab, id_col).select(
-            id_col,
-            "pred_lang",
-            "n_tokens",
-            "quality",
-            F.col("__cid").alias("component_id"),
-            "cleaned_text",
-            "n_tokens_removed",
-            "split",
-        )
-        reused = reused.join(
-            ru_lab.select(id_col), id_col, "left_anti"
-        ).unionByName(relabeled)
-    output = reused.unionByName(recomputed_out)
-    out = {
-        "bands": new_bands,
-        "rows": new_rows,
-        "survivors": surv,
-        "band_keys": rebanded["band_keys"],
-        "dg_members": state["dg_members"],
-        "rep_digests": state["rep_digests"],
-        "text_digests": state["text_digests"],
-        "pairs": pairs,
-        "rep_ids": rep_ids,
-        "rep_grams": grams_union,
-        "output": output,
-    }
-    if state.get("n_survivors") is not None:
-        out["n_survivors"] = state["n_survivors"]  # survivors untouched
-    if rank_col is not None:
-        out["rank_col"] = rank_col
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2540,9 +2423,10 @@ def retire_superseded_state(old_state: dict, new_state: dict) -> int:
     output but keeps survivors / member maps, so a blanket
     leaf-unpersist of the old dict would kill blocks the new dict still
     reads). Returns the number of leaves unpersisted. Used by the
-    streaming sink's per-fold migration hook; batch callers that
-    migrate then keep folding should call it too, or let the next
-    compaction's retire scope absorb the residue."""
+    applies' post-fold migration hook (_finish_fold) and by the
+    streaming sinks' compaction; batch callers that migrate then keep
+    folding should call it too, or let the next compaction's retire
+    scope absorb the residue."""
     keep = set()
     for v in new_state.values():
         if isinstance(v, DataFrame):

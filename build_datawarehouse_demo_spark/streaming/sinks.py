@@ -209,7 +209,8 @@ def stream_clean_filter_state_append(
     ``migrate_banding=True`` (r15 VERDICT) closes the frozen-banding
     staleness loop for long-running streams: after every fold the
     state's banding is re-trained for the corpus size it has grown to
-    (plans/training_data.migrate_clean_filter_banding with the running
+    (the apply's own ``migrate_banding`` hook, i.e.
+    plans/training_data.migrate_clean_filter_banding, at the running
     survivor count, maintained INCREMENTALLY: seeded with one count at
     wiring, then += the fold's O(batch) survivor delta — r16 ADVICE,
     no corpus-sized count per micro-batch) — a documented no-op
@@ -223,32 +224,49 @@ def stream_clean_filter_state_append(
     retired immediately (retire_superseded_state).
     """
     from build_datawarehouse_demo_spark.plans.training_data import (
+        clean_filter_dedup_apply,
+    )
+
+    return _stream_state_append(
+        clean_filter_dedup_apply, docs, holder, checkpoint_dir, id_col,
+        compact_every, compact_to, compact_path, migrate_banding, knobs,
+    )
+
+
+def _stream_state_append(
+    apply,
+    docs: DataFrame,
+    holder: dict,
+    checkpoint_dir: str,
+    id_col: str,
+    compact_every: int,
+    compact_to: str | None,
+    compact_path: str | None,
+    migrate_banding: bool,
+    knobs: dict,
+):
+    """The streaming fold both curation sinks delegate to: each
+    micro-batch, minus the ids already folded, goes through ``apply``
+    (clean_filter_dedup_apply or training_data_neardup_apply) with the
+    caller's ``knobs`` — the contract is documented at
+    stream_clean_filter_state_append.
+
+    ``migrate_banding`` passes straight through to the apply, whose
+    post-fold tail migrates at the incremental survivor count (seeded
+    here once at wiring) and retires the superseded frames. Compaction
+    stays here, NOT in the apply's ``compact_to`` path: the sink needs
+    the retry-safe order (write with no unpersist and no GC, swap the
+    holder, then retire, sweep the fold RDDs and GC)."""
+    from build_datawarehouse_demo_spark.plans.training_data import (
         _persistent_rdd_ids,
         _retire_persistent_rdds_since,
-        clean_filter_dedup_apply,
         compact_state,
         gc_generations,
-        migrate_clean_filter_banding,
         retire_superseded_state,
     )
 
     if compact_every and not compact_to:
         raise ValueError("compact_every requires compact_to (table-name prefix)")
-    # the migration op shares these knobs with the apply — they must
-    # describe the same pipeline parameters in both calls
-    mig_knobs = {
-        k: knobs[k]
-        for k in (
-            "shingle_k",
-            "jaccard_threshold",
-            "val_frac",
-            "test_frac",
-            # keep policy is part of the state's identity
-            "rank_col",
-            "soft_weights",
-        )
-        if k in knobs
-    }
     # retire scope for compaction, snapshotted at WIRING time: after a
     # compacting fold, every frame is a table scan, so every RDD
     # persisted since the stream started (hidden fold intermediates
@@ -269,24 +287,16 @@ def stream_clean_filter_state_append(
         holder["state"]["n_survivors"] = holder["state"]["survivors"].count()
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         seen = holder["state"]["survivors"].select(id_col)
         fresh = batch_df.join(seen, id_col, "left_anti")
-        compact_now = bool(compact_every) and (
-            batch_id % compact_every == compact_every - 1
+        st = apply(
+            fresh,
+            holder["state"],
+            id_col=id_col,
+            migrate_banding=migrate_banding,
+            **knobs,
         )
-        st = clean_filter_dedup_apply(fresh, holder["state"], id_col=id_col, **knobs)
-        if migrate_banding:
-            migrated = migrate_clean_filter_banding(
-                st, corpus_n=st["n_survivors"], id_col=id_col, **mig_knobs
-            )
-            if migrated is not st:
-                # boundary crossed: free the replaced frames' blocks
-                # (band_keys/pairs/output), keep everything the
-                # migrated state still reads (survivors, member maps)
-                retire_superseded_state(st, migrated)
-                st = migrated
-        if compact_now:
+        if compact_every and batch_id % compact_every == compact_every - 1:
             # retry safety (r16 ADVICE): write the new generation and
             # SWAP the live state before retiring anything — a
             # foreachBatch retry between compaction and the swap must
@@ -315,8 +325,8 @@ def stream_clean_filter_state_append(
             )
             holder["state"] = st
             retire_superseded_state(old, st)
-            _retire_persistent_rdds_since(spark, scope0)
-            gc_generations(spark, compact_to, base_path=compact_path)
+            _retire_persistent_rdds_since(batch_df.sparkSession, scope0)
+            gc_generations(batch_df.sparkSession, compact_to, base_path=compact_path)
         holder["state"] = st
 
     return (
@@ -350,101 +360,22 @@ def stream_training_data_state_append(
     REUSED — only the batch is scanned, only span-affected documents
     rebuild.
 
-    Contract-identical to the clean sink, delegated to the same
-    machinery (read its docstring for the details):
-    - ``holder`` = {"state": <training_data_neardup_state dict>},
-      refreshed after every batch; ``knobs`` are the apply's filter /
-      banding / span parameters and must match the state build.
-    - effectively exactly-once: checkpoint-pinned batch ids + the
-      survivor-id anti-join drop same-id redeliveries; a new-id
-      re-crawl joins its original's digest group and loses the rep
-      race (output unchanged — the batch contract). Under keep-best
-      (``rank_col=...`` in ``knobs``, matching the state build) a
-      higher-rank NEAR-dup re-crawl displaces the stored rep — see
-      training_data_neardup_apply.
-    - ``compact_every=N`` / ``compact_to`` / ``compact_path``: every
-      N batches (batch_id-derived cadence, retry/restart-stable) the
-      state compacts to bucketed parquet generations with the
-      retry-safe order — write keeping 2 generations, SWAP the
-      holder, then retire superseded blocks + hidden fold RDDs and GC
-      to one generation.
-    - ``migrate_banding=True``: per-fold frozen-banding migration at
-      the incremental survivor count (seeded once at wiring, += each
-      fold's O(batch) delta), through
-      migrate_training_data_neardup_banding — span output repaired
-      for exactly the rep-set diff; superseded frames retired.
+    Same streaming fold as the clean sink (_stream_state_append), so the
+    same contract holds — see stream_clean_filter_state_append for
+    ``holder``, exactly-once delivery, the ``compact_every`` cadence
+    and ``migrate_banding``. ``holder`` carries a
+    training_data_neardup_state dict and ``knobs`` are
+    training_data_neardup_apply's filter / banding / span parameters;
+    keep-best displacement and the span repair of a banding migration
+    are documented there and at migrate_training_data_neardup_banding.
     """
     from build_datawarehouse_demo_spark.plans.training_data import (
-        _persistent_rdd_ids,
-        _retire_persistent_rdds_since,
-        compact_state,
-        gc_generations,
-        migrate_training_data_neardup_banding,
-        retire_superseded_state,
         training_data_neardup_apply,
     )
 
-    if compact_every and not compact_to:
-        raise ValueError("compact_every requires compact_to (table-name prefix)")
-    mig_knobs = {
-        k: knobs[k]
-        for k in (
-            "shingle_k",
-            "jaccard_threshold",
-            "span_window",
-            "span_min_docs",
-            "val_frac",
-            "test_frac",
-            "rank_col",  # keep policy is part of the state's identity
-        )
-        if k in knobs
-    }
-    scope0 = _persistent_rdd_ids(docs.sparkSession) if compact_every else None
-    if migrate_banding and holder["state"].get("n_survivors") is None:
-        holder["state"]["n_survivors"] = holder["state"]["survivors"].count()
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        seen = holder["state"]["survivors"].select(id_col)
-        fresh = batch_df.join(seen, id_col, "left_anti")
-        compact_now = bool(compact_every) and (
-            batch_id % compact_every == compact_every - 1
-        )
-        st = training_data_neardup_apply(
-            fresh, holder["state"], id_col=id_col, **knobs
-        )
-        if migrate_banding:
-            migrated = migrate_training_data_neardup_banding(
-                st, corpus_n=st["n_survivors"], id_col=id_col, **mig_knobs
-            )
-            if migrated is not st:
-                retire_superseded_state(st, migrated)
-                st = migrated
-        if compact_now:
-            # same retry-safe order as the clean sink: write with ALL
-            # GC suppressed (r17 ADVICE — pre-swap GC could strand a
-            # twice-retried unswapped holder), swap, THEN retire and
-            # GC to 1
-            old = st
-            st = compact_state(
-                old,
-                compact_to,
-                base_path=compact_path,
-                id_col=id_col,
-                unpersist_superseded=False,
-                gc_superseded=False,
-            )
-            holder["state"] = st
-            retire_superseded_state(old, st)
-            _retire_persistent_rdds_since(spark, scope0)
-            gc_generations(spark, compact_to, base_path=compact_path)
-        holder["state"] = st
-
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_state_append(
+        training_data_neardup_apply, docs, holder, checkpoint_dir, id_col,
+        compact_every, compact_to, compact_path, migrate_banding, knobs,
     )
 
 

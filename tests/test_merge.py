@@ -519,3 +519,54 @@ def test_merge_delete_all_rows_keeps_table_readable(spark, tmp_path):
     merge_into_partitioned_parquet(spark, path, feed2, ["id"], ["seq", "id"], "part")
     rows = {(r.id, r.part, r.v) for r in spark.read.parquet(path).collect()}
     assert rows == {(7, 2, 9.0)}
+
+
+def test_merge_deletes_partition_whose_value_needs_escaping(spark, tmp_path):
+    """Partition directories are named with Spark's own path escaping
+    (``part=a%2Fb %3Dc`` for ``a/b =c``): a feed deleting every row of
+    such a partition must remove its directory, and emptying the table
+    must anchor the schema in an escaped directory too."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, "a/b =c", 1.0), (2, "a/b =c", 2.0), (3, "x/y", 3.0)],
+        "id long, part string, v double",
+    ).write.mode("overwrite").partitionBy("part").parquet(path)
+    schema = "id long, part string, v double, op string, seq int"
+
+    feed = spark.createDataFrame(
+        [(1, "a/b =c", 0.0, "D", 1), (2, "a/b =c", 0.0, "D", 1)], schema
+    )
+    touched = merge_into_partitioned_parquet(
+        spark, path, feed, ["id"], ["seq", "id"], "part"
+    )
+    assert touched == ["a/b =c"]
+    assert {(r.id, r.part, r.v) for r in spark.read.parquet(path).collect()} == {
+        (3, "x/y", 3.0)
+    }
+    assert sorted(d for d in os.listdir(path) if d.startswith("part=")) == [
+        "part=x%2Fy"
+    ]
+
+    feed2 = spark.createDataFrame([(3, "x/y", 0.0, "D", 1)], schema)
+    merge_into_partitioned_parquet(spark, path, feed2, ["id"], ["seq", "id"], "part")
+    back = spark.read.parquet(path)
+    assert back.count() == 0
+    assert set(back.columns) == {"id", "part", "v"}
+
+
+def test_merge_deletes_null_partition(spark, tmp_path):
+    """A NULL partition value lives in Spark's default-partition
+    directory; deleting every row of it must remove that directory."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, None, 1.0), (2, None, 2.0), (3, "x", 3.0)],
+        "id long, part string, v double",
+    ).write.mode("overwrite").partitionBy("part").parquet(path)
+    feed = spark.createDataFrame(
+        [(1, None, 0.0, "D", 1), (2, None, 0.0, "D", 1)],
+        "id long, part string, v double, op string, seq int",
+    )
+    merge_into_partitioned_parquet(spark, path, feed, ["id"], ["seq", "id"], "part")
+    assert {(r.id, r.part, r.v) for r in spark.read.parquet(path).collect()} == {
+        (3, "x", 3.0)
+    }

@@ -104,3 +104,65 @@ def test_neardup_stream_compact_every_requires_prefix(spark):
             checkpoint_dir="/tmp/never",
             compact_every=2,
         )
+
+
+def test_neardup_stream_migration_rebands_at_boundary(spark, tmp_path):
+    """migrate_banding=True across a minhash_auto_params boundary: the
+    survivor count stays under 100 after batch 1 (the migration hook
+    is a no-op) and crosses it in batch 2, which also carries a
+    near-dup of a stored doc. The stream must end re-banded to the
+    final corpus size, with the incremental survivor counter exact and
+    the output equal to the full neardup chain over old ∪ new at the
+    NEW params (span stage included)."""
+    from build_datawarehouse_demo_spark.operators.dedup import minhash_auto_params
+    from build_datawarehouse_demo_spark.plans.training_data import (
+        prepare_training_data_neardup,
+        training_data_neardup_state,
+    )
+    from build_datawarehouse_demo_spark.streaming.sinks import (
+        stream_training_data_state_append,
+    )
+
+    old_rows = [(i, _doc(i)) for i in range(80)]
+    b1 = [(100 + i, _doc(100 + i)) for i in range(15)]
+    b2 = [(200 + i, _doc(200 + i)) for i in range(14)]
+    # near-dup of old doc 10: same 40-word stream with a 2-word new tail
+    b2.append((250, " ".join(_doc(10).split()[:38] + ["zzm1", "zzm2"])))
+
+    holder = {
+        "state": training_data_neardup_state(
+            _corpus(spark, old_rows), corpus_n=len(old_rows)
+        )
+    }
+    feed = str(tmp_path / "feed")
+    for i, b in enumerate((b1, b2)):
+        mode = "overwrite" if i == 0 else "append"
+        spark.createDataFrame(b, "doc_id long, text string").coalesce(
+            1
+        ).write.mode(mode).parquet(feed)
+    q = stream_training_data_state_append(
+        spark.readStream.format("parquet")
+        .schema(SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .load(feed),
+        holder,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        migrate_banding=True,
+    )
+    assert q.awaitTermination(240)
+    state = holder["state"]
+
+    n_final = state["survivors"].count()
+    assert n_final == 110
+    assert state["n_survivors"] == n_final
+    # after batch 1 (95 survivors) the banding is still the build's
+    assert minhash_auto_params(95) == minhash_auto_params(80)
+    assert (state["bands"], state["rows"]) == minhash_auto_params(n_final)
+    assert (state["bands"], state["rows"]) != minhash_auto_params(len(old_rows))
+    full = prepare_training_data_neardup(
+        _corpus(spark, old_rows + b1 + b2), corpus_n=n_final
+    )
+    assert _rows(state["output"]) == _rows(full)
+    ids = {r[0] for r in _rows(state["output"])}
+    # the near-dup lost the rep race to the stored doc
+    assert 10 in ids and 250 not in ids

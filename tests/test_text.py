@@ -1204,6 +1204,27 @@ def test_clean_front_kernel_identical_edge_corpus(spark):
     assert len(arw) > 0
 
 
+def test_clean_front_bucket_cache_cap_keeps_survivors(spark, monkeypatch):
+    """The clean-front kernel's per-task token -> bucket cache is
+    cleared whenever it reaches _CLEAN_BUCKET_CACHE_MAX entries. With a
+    cap of 2 it refills many times per document; survivors and scores
+    must still equal the JVM chain on the edge corpus."""
+    import jvm_reference as ref
+    from build_datawarehouse_demo_spark.operators import text
+    from build_datawarehouse_demo_spark.plans.training_data import (
+        clean_filter_survivors,
+    )
+
+    monkeypatch.setattr(text, "_CLEAN_BUCKET_CACHE_MAX", 2)
+    df = spark.createDataFrame(_edge_corpus_rows(), "doc_id long, text string")
+    kw = dict(min_words_per_line=3, min_sentences=1, min_words=5,
+              min_stopword_hits=1, max_top_gram_char_frac=(0.5, 0.5, 0.5),
+              clf_dim=16, clf_threshold=0.0)
+    jvm = sorted(tuple(r) for r in ref.clean_filter_survivors(df, **kw).collect())
+    arw = sorted(tuple(r) for r in clean_filter_survivors(df, **kw).collect())
+    assert jvm == arw and len(arw) > 0
+
+
 def test_featured_front_kernel_identical_edge_corpus(spark):
     """_featured_survivors (fused mapInPandas front) must be
     ROW-IDENTICAL to jvm_reference.featured_survivors — including the UNROUNDED `quality` doubles (exact
