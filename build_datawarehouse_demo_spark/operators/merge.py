@@ -50,7 +50,7 @@ the same call shape so swapping the sink is a one-line change.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from build_datawarehouse_demo_spark.operators.scd import apply_cdc_changes
@@ -89,6 +89,22 @@ def _partition_dir(spark: SparkSession, partition_col: str, value) -> str:
     return utils.getPartitionPathString(
         partition_col, None if value is None else str(value)
     )
+
+
+def _in_partitions(partition_col: str, values) -> Column:
+    """Null-safe membership in the feed's partition values. ``isin``
+    never matches NULL, but NULL is a real partition (Spark's default
+    partition directory), so a NULL in ``values`` adds ``isNull()``."""
+    col = F.col(partition_col)
+    present = [v for v in values if v is not None]
+    cond = col.isin(present) if present else F.lit(False)
+    return (cond | col.isNull()) if None in values else cond
+
+
+def _sorted_partitions(values) -> list:
+    """Partition values sorted, NULL last (None does not compare with
+    the other values)."""
+    return sorted(values, key=lambda v: (v is None, v))
 
 
 def _delete_partition_dirs(
@@ -185,8 +201,9 @@ def merge_into_partitioned_parquet(
 ) -> list:
     """Apply a CDC change feed to a partitioned parquet table in
     place, rewriting only touched partitions. Returns the touched
-    partition values (sorted) so callers/tests can audit the blast
-    radius.
+    partition values (sorted, NULL last) so callers/tests can audit
+    the blast radius. A NULL partition value is a partition like any
+    other: it lives in Spark's default partition directory.
 
     ``version_aware=False`` (default): the feed unconditionally
     replaces matched keys — correct when batches arrive log-ordered
@@ -319,11 +336,11 @@ def merge_into_partitioned_parquet(
         winners.drop(*([op_col] if op_col else [])).write.mode(
             "overwrite"
         ).partitionBy(partition_col).parquet(target_path)
-        return sorted(part_vals)
+        return _sorted_partitions(part_vals)
 
     target = spark.read.parquet(target_path)
     data_cols = list(target.columns)
-    touched = target.where(F.col(partition_col).isin(part_vals))
+    touched = target.where(_in_partitions(partition_col, part_vals))
 
     if version_aware:
         # target rows enter the same last-change-wins contest as the
@@ -343,7 +360,7 @@ def merge_into_partitioned_parquet(
             # had no deletes — has no files to infer from
             tomb_schema = StructType([target.schema[c] for c in tomb_cols])
             tombs = spark.read.schema(tomb_schema).parquet(tomb_path).where(
-                F.col(partition_col).isin(part_vals)
+                _in_partitions(partition_col, part_vals)
             )
             # widen to the data schema (columns a tombstone doesn't
             # carry are null — if it wins, the key is gone anyway)
@@ -422,6 +439,6 @@ def merge_into_partitioned_parquet(
         # the feed may have deleted the table's last rows — keep the
         # path readable (schema anchor; no-op while any file remains)
         _anchor_schema_if_emptied(
-            spark, target_path, partition_col, target, sorted(part_vals)[0]
+            spark, target_path, partition_col, target, _sorted_partitions(part_vals)[0]
         )
-    return sorted(part_vals)
+    return _sorted_partitions(part_vals)

@@ -728,7 +728,6 @@ def _span_delta_refresh(
     reuse_ids: DataFrame,
     old_output: DataFrame,
     comp_r: DataFrame | None,
-    relabel,
     id_col: str,
     span_window: int,
     span_min_docs: int,
@@ -753,10 +752,10 @@ def _span_delta_refresh(
 
     ``comp_r`` is None under the min-id policy (every rep IS its
     component label). Under keep-best it is the refreshed component
-    map: recomputed rows take their component min as label, and the
-    reused rows that ``relabel`` (a filter over (id, component_id,
-    __cid) rows) selects re-emit with the refreshed label — a merge can
-    lower a kept winner's component min without touching its text."""
+    map: recomputed rows take their component min as label, and reused
+    rows whose stored label differs from it re-emit with the refreshed
+    label — a merge can lower a kept winner's component min without
+    touching its text."""
     from build_datawarehouse_demo_spark.operators.dedup import (
         remove_spans_given_owners,
         _window_gram_rows,
@@ -823,11 +822,8 @@ def _span_delta_refresh(
     if comp_r is not None:
         # a projection over the relabeled rows only — never a span rebuild
         ru_lab = (
-            relabel(
-                _component_labeled(
-                    reused.select(id_col, "component_id"), comp_r, id_col
-                )
-            )
+            _component_labeled(reused.select(id_col, "component_id"), comp_r, id_col)
+            .filter(F.col("__cid") != F.col("component_id"))
             .select(id_col, "__cid")
             .localCheckpoint()
         )
@@ -1111,7 +1107,6 @@ def training_data_neardup_apply(
             .select(id_col)
             .localCheckpoint()
         )
-        touched_labels = None
     else:
         # keep-best rep selection over the TOUCHED components only
         # (see docstring): candidates = those components' stored keeps
@@ -1167,7 +1162,6 @@ def training_data_neardup_apply(
         reuse_ids=kept_old_rep_ids,
         old_output=state["output"],
         comp_r=None if rank_col is None else compR,
-        relabel=lambda f: f.join(touched_labels, "__cid", "left_semi"),
         id_col=id_col,
         span_window=span_window,
         span_min_docs=span_min_docs,
@@ -2186,7 +2180,6 @@ def migrate_training_data_neardup_banding(
         reuse_ids=rep_ids,
         old_output=state["output"],
         comp_r=None if rank_col is None else compR,
-        relabel=lambda f: f.filter(F.col("__cid") != F.col("component_id")),
         id_col=id_col,
         span_window=span_window,
         span_min_docs=span_min_docs,

@@ -554,19 +554,74 @@ def test_merge_deletes_partition_whose_value_needs_escaping(spark, tmp_path):
     assert set(back.columns) == {"id", "part", "v"}
 
 
-def test_merge_deletes_null_partition(spark, tmp_path):
-    """A NULL partition value lives in Spark's default-partition
-    directory; deleting every row of it must remove that directory."""
+def test_merge_null_partition_delete_and_upsert(spark, tmp_path):
+    """NULL is a real partition (Spark's default partition directory).
+    Rows of it that the feed does not name survive a merge into it: a
+    delete of one key keeps its siblings, and an upsert rewrites the
+    partition with them. A feed touching NULL and non-NULL partitions
+    returns them sorted, NULL last. Deleting the partition's last rows
+    removes its directory."""
     path = str(tmp_path / "t")
     spark.createDataFrame(
-        [(1, None, 1.0), (2, None, 2.0), (3, "x", 3.0)],
+        [(1, None, 1.0), (2, None, 2.0), (3, None, 3.0), (4, "x", 4.0)],
         "id long, part string, v double",
     ).write.mode("overwrite").partitionBy("part").parquet(path)
-    feed = spark.createDataFrame(
-        [(1, None, 0.0, "D", 1), (2, None, 0.0, "D", 1)],
-        "id long, part string, v double, op string, seq int",
-    )
-    merge_into_partitioned_parquet(spark, path, feed, ["id"], ["seq", "id"], "part")
+    schema = "id long, part string, v double, op string, seq int"
+    args = (["id"], ["seq", "id"], "part")
+
+    feed = spark.createDataFrame([(1, None, 0.0, "D", 1)], schema)
+    assert merge_into_partitioned_parquet(spark, path, feed, *args) == [None]
     assert {(r.id, r.part, r.v) for r in spark.read.parquet(path).collect()} == {
-        (3, "x", 3.0)
+        (2, None, 2.0), (3, None, 3.0), (4, "x", 4.0)
     }
+
+    feed2 = spark.createDataFrame(
+        [(2, None, 22.0, "U", 1), (4, "x", 44.0, "U", 1)], schema
+    )
+    assert merge_into_partitioned_parquet(spark, path, feed2, *args) == ["x", None]
+    assert {(r.id, r.part, r.v) for r in spark.read.parquet(path).collect()} == {
+        (2, None, 22.0), (3, None, 3.0), (4, "x", 44.0)
+    }
+
+    feed3 = spark.createDataFrame(
+        [(2, None, 0.0, "D", 2), (3, None, 0.0, "D", 2)], schema
+    )
+    merge_into_partitioned_parquet(spark, path, feed3, *args)
+    assert {(r.id, r.part, r.v) for r in spark.read.parquet(path).collect()} == {
+        (4, "x", 44.0)
+    }
+    assert [d for d in os.listdir(path) if d.startswith("part=")] == ["part=x"]
+
+
+def test_merge_version_aware_null_partition_keeps_tombstones(spark, tmp_path):
+    """version_aware over the NULL partition: an upsert into it keeps
+    the partition's untouched rows and its stored tombstones, so a
+    stale update of a deleted key still loses in a later batch."""
+    from build_datawarehouse_demo_spark.operators.merge import (
+        tombstone_store_path,
+    )
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, None, 1.0, 1), (2, None, 2.0, 1), (3, None, 3.0, 1), (4, "x", 4.0, 1)],
+        "id long, part string, v double, seq int",
+    ).write.mode("overwrite").partitionBy("part").parquet(path)
+    schema = "id long, part string, v double, op string, seq int"
+
+    def merge(rows):
+        merge_into_partitioned_parquet(
+            spark, path, spark.createDataFrame(rows, schema),
+            ["id"], ["seq", "id"], "part", version_aware=True,
+        )
+
+    def tombs():
+        store = spark.read.parquet(tombstone_store_path(path))
+        return {(r.id, r.part, r.seq) for r in store.collect()}
+
+    merge([(1, None, 0.0, "D", 10)])
+    assert tombs() == {(1, None, 10)}
+    merge([(2, None, 22.0, "U", 20)])
+    assert tombs() == {(1, None, 10)}
+    merge([(1, None, 99.0, "U", 5)])
+    got = {(r.id, r.part, r.v, r.seq) for r in spark.read.parquet(path).collect()}
+    assert got == {(2, None, 22.0, 20), (3, None, 3.0, 1), (4, "x", 4.0, 1)}
